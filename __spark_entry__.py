@@ -222,7 +222,7 @@ _FRESHNESS_URL_SQL = "'https://ex.test/blog/' || CAST(o_orderkey % 7 + 1992 AS V
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: deep BFS crawl with the FULL schedule wired in — scorer,
     robots gate, per-host politeness budget (D1 deferral), 429/503 backoff
-    retries (D2), Bloom URL-seen sidecar (T6) — over the deterministic
+    retries (D2), exact URL-seen anti-join (T6) — over the deterministic
     synthetic image+caption web graph; also touches the sf0.001 testdata to
     exercise the parquet ingestion path."""
     _ = _t(spark, "/root/testdata/sf0.001", "documents").count()
@@ -1038,6 +1038,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the SAME bfs crawl interrupted after one committed superstep
         # and resumed from the snapshot store must equal the
         # uninterrupted expected crawl row-for-row
+        import atexit
         import shutil
         import tempfile
 
@@ -1055,10 +1056,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         cfg_part = CrawlConfig(
             strategy="bfs", max_depth=2, max_pages=150, max_supersteps=1,
             scorer=ScorerSpec(kind="freshness", current_year=2024))
-        # one fixed dir per machine, wiped before each run — repeated
-        # probe invocations must not accumulate checkpoint trees in /tmp
-        ckdir = os.path.join(tempfile.gettempdir(), "crawl4ai_resume_probe")
-        shutil.rmtree(ckdir, ignore_errors=True)
+        # a private dir per call: concurrent invocations never share a
+        # checkpoint tree, and no other user can pre-create it.  The
+        # returned DataFrame reads the snapshot lazily, so the dir is
+        # removed at interpreter exit, not here.
+        ckdir = tempfile.mkdtemp(prefix="crawl4ai_resume_probe")
+        atexit.register(shutil.rmtree, ckdir, ignore_errors=True)
         store = SnapshotStore(ckdir)
         CrawlEngine(spark, pages, links, cfg_part, store=store).run(seeds)
         run = CrawlEngine(spark, pages, links, cfg_full,
@@ -3861,7 +3864,8 @@ def oracle_sql() -> dict[str, str]:
     """
 
     o["host_budget"] = """
-        SELECT event_id, host, rn - 1 AS host_rank, (rn - 1) * 2.0 AS send_at_s
+        SELECT event_id, host, rn - 1 AS host_rank,
+               CAST((rn - 1) * 2.0 AS DOUBLE) AS send_at_s
         FROM (
           SELECT event_id, 'u' || CAST(user_id % 37 AS VARCHAR) AS host,
                  row_number() OVER (PARTITION BY 'u' || CAST(user_id % 37 AS VARCHAR)
@@ -4651,13 +4655,13 @@ def oracle_sql() -> dict[str, str]:
             coalesce(string_agg(CASE WHEN line_df < 8 THEN line END,
                                 chr(10) ORDER BY pos), '') AS text_clean,
             count(*) AS n_lines,
-            sum(CASE WHEN line_df < 8 THEN 1 ELSE 0 END) AS n_kept
+            CAST(sum(CASE WHEN line_df < 8 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
           FROM c GROUP BY doc_id)
         SELECT d.doc_id,
           md5(coalesce(agg.text_clean, '')) AS clean_md5,
           length(coalesce(agg.text_clean, '')) AS clean_len,
           coalesce(agg.n_lines, 0) AS n_lines,
-          coalesce(agg.n_kept, 0) AS n_kept
+          CAST(coalesce(agg.n_kept, 0) AS BIGINT) AS n_kept
         FROM d LEFT JOIN agg ON d.doc_id = agg.doc_id
     """
 
@@ -4740,13 +4744,13 @@ def oracle_sql() -> dict[str, str]:
         tc AS (SELECT bucket, count(*) AS ct FROM tf GROUP BY bucket),
         per AS (
           SELECT rf.doc_id, count(*) AS n_feats,
-                 sum(coalesce(tc.ct, 0)) AS tct_sum,
-                 sum(rc.cr) AS rcr_sum
+                 CAST(sum(coalesce(tc.ct, 0)) AS BIGINT) AS tct_sum,
+                 CAST(sum(rc.cr) AS BIGINT) AS rcr_sum
           FROM rf JOIN rc USING (bucket) LEFT JOIN tc USING (bucket)
           GROUP BY rf.doc_id)
         SELECT d.doc_id, coalesce(per.n_feats, 0) AS n_feats,
-               coalesce(per.tct_sum, 0) AS tct_sum,
-               coalesce(per.rcr_sum, 0) AS rcr_sum
+               CAST(coalesce(per.tct_sum, 0) AS BIGINT) AS tct_sum,
+               CAST(coalesce(per.rcr_sum, 0) AS BIGINT) AS rcr_sum
         FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
     """
 

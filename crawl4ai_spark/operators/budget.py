@@ -93,8 +93,13 @@ def apportion_budget(weights: DataFrame, total_budget: int,
     w = weights.select(
         F.col(host_col).alias("host"),
         F.col(weight_col).cast("long").alias("weight")).localCheckpoint()
-    tot = w.agg(F.sum(F.col("weight").cast("decimal(38,0)"))
-                .alias("t")).collect()[0]["t"]
+    agg = w.agg(F.sum(F.col("weight").cast("decimal(38,0)")).alias("t"),
+                F.min("weight").alias("lo")).collect()[0]
+    if agg["lo"] is not None and agg["lo"] < 0:
+        # a negative weight makes base_grant/remainder negative and the
+        # leftover exceed the host count: sum(granted) == B would break
+        raise ValueError("weights must be >= 0")
+    tot = agg["t"]
     if tot is None or int(tot) <= 0:
         raise ValueError("weights must sum > 0")
     W = int(tot)

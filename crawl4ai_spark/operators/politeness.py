@@ -39,11 +39,12 @@ def with_host_slots(df: DataFrame, politeness: DataFrame | None,
     (virtual send slot = host_rank × delay_s).  ``politeness`` is the small
     (host, delay_s, ...) dimension — broadcast joined."""
     if politeness is not None:
-        # one dim row per host, MIN delay on conflict: a duplicate host
-        # row in the dim would fan every frontier row for that host into
-        # duplicate fetches (robots_gate_df guards its dim the same way)
+        # one dim row per host: a duplicate host row in the dim would fan
+        # every frontier row for that host into duplicate fetches
+        # (robots_gate_df guards its dim the same way); conflicting rows
+        # merge to the MAX delay, the most conservative (fail-safe) one
         dim = politeness.groupBy(host_col).agg(
-            F.min("delay_s").alias("delay_s"))
+            F.max("delay_s").alias("delay_s"))
         df = df.join(F.broadcast(dim), host_col, "left")
         delay = F.coalesce(F.col("delay_s"), F.lit(default_delay))
     else:
@@ -372,11 +373,12 @@ def with_salted_host_slots(df: DataFrame, politeness: DataFrame | None,
     if not hot_hosts or salt_buckets <= 1:
         return with_host_slots(df, politeness, order_cols, host_col, default_delay)
     if politeness is not None:
-        # one dim row per host, MIN delay on conflict: a duplicate host
-        # row in the dim would fan every frontier row for that host into
-        # duplicate fetches (robots_gate_df guards its dim the same way)
+        # one dim row per host: a duplicate host row in the dim would fan
+        # every frontier row for that host into duplicate fetches
+        # (robots_gate_df guards its dim the same way); conflicting rows
+        # merge to the MAX delay, the most conservative (fail-safe) one
         dim = politeness.groupBy(host_col).agg(
-            F.min("delay_s").alias("delay_s"))
+            F.max("delay_s").alias("delay_s"))
         df = df.join(F.broadcast(dim), host_col, "left")
         delay = F.coalesce(F.col("delay_s"), F.lit(default_delay))
     else:
@@ -539,9 +541,11 @@ def ip_budget_split(hosts: DataFrame, dns: DataFrame | None = None,
         # at full scale), and a shuffle join on ip co-partitions with the
         # ip window below, so the exchange is shared; AQE still picks a
         # broadcast when the dim is actually small
-        mapped = mapped.join(
-            budgets.select(ip_col, F.col("budget").alias("__ipb")),
-            ip_col, "left")
+        # one budget per ip, MIN on conflict (the conservative budget):
+        # a duplicate ip row would fan every collocated host into several
+        # rows, inflating the ip's host count and its granted total
+        ipb = budgets.groupBy(ip_col).agg(F.min("budget").alias("__ipb"))
+        mapped = mapped.join(ipb, ip_col, "left")
         budget = F.coalesce(F.col("__ipb"), F.lit(int(ip_budget)))
     else:
         budget = F.lit(int(ip_budget))

@@ -1,23 +1,24 @@
-"""URL-seen dedup: exact anti-join + partitioned Bloom prefilter.
+"""URL-seen filters: partitioned Bloom and cuckoo sidecars.
 
 North_rule: "URL-seen dedup is a partitioned Bloom/cuckoo filter keyed by
-canonicalized-URL xxhash64".  Design:
+canonicalized-URL xxhash64".  The crawl engine's URL-seen check is the
+exact ``left_anti`` join of candidate links against the seen table on the
+full canonical URL (plans/frontier.py), so exactness is unconditional and
+the hash only drives partitioning.  The filters here are standalone
+operators, not part of the crawl loop:
 
-  - **Exactness** comes from a ``left_anti`` join of candidate links against
-    the seen table.  A pure 64-bit-key join would already be near-exact
-    (birthday bound at n = 10^10: ~1 − exp(−n²/2^65) ≈ 0.93 probability of
-    at least ONE collision somewhere in the corpus — i.e. a handful of
-    false "seen" URLs), but we join on the full URL string,
-    hash-partitioned by ``url_hash``, so exactness is unconditional and
-    the hash only drives partitioning/bucketing.
-  - **The Bloom sidecar** (reference experiment: deep_crawling/crazy.py:
-    102-165, optimal m = −n·ln p/ln²2, k = (m/n)·ln 2) cuts the anti-join's
-    probe side: candidates whose bucketed Bloom says "definitely new" skip
-    the shuffle join entirely; only "maybe seen" rows (true dups + FP ≈ 1%)
-    join. At 10^10 seen URLs the filter is ~12 GiB total, far too big to
-    broadcast — hence *partitioned*: bit-arrays are sharded by
+  - **BloomSidecar** (reference experiment: deep_crawling/crazy.py:102-165,
+    optimal m = −n·ln p/ln²2, k = (m/n)·ln 2) and **CuckooSidecar** (adds
+    delete, for recrawl-TTL eviction) flag ``maybe_seen`` per candidate;
+    False ⇒ definitely new.  Bit-arrays / fingerprint tables are sharded by
     ``pmod(url_hash, n_buckets)`` and met with a same-key cogroup, never
     collected to one node.
+  - They are not in the engine because a candidate-side prefilter never
+    removes the anti-join's scan and shuffle of the seen table: the
+    suspect slice still joins the full table, so the filter's Python add,
+    merge and probe stages are extra work on every benchmark workload
+    (BASELINE.md).  A filter returns to the engine only with a workload
+    on which it wins.
 
 Hash family: double hashing h_i = h1 + i·h2 from the two halves of
 xxh64(url) — the standard Kirsch-Mitzenmacher construction.
@@ -26,7 +27,6 @@ xxh64(url) — the standard Kirsch-Mitzenmacher construction.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -63,111 +63,26 @@ def _test_bits(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return got.all(axis=1)
 
 
-class PartitionedBloom:
-    """Bucketed Bloom filter over signed-64 ``url_hash`` keys.
-
-    Stored as a small DataFrame-able pandas frame (bucket, m, k, bits) —
-    per-bucket binary bit arrays. Build is a groupBy-bucket fold; probe is
-    an Arrow cogroup per bucket (scale path) or broadcast (small path).
-    """
-
-    def __init__(self, n_buckets: int, m_per_bucket: int, k: int,
-                 bits: dict[int, np.ndarray] | None = None):
-        self.n_buckets = n_buckets
-        self.m = m_per_bucket
-        self.k = k
-        self.bits = bits if bits is not None else {}
-
-    @classmethod
-    def build(cls, seen: DataFrame, hash_col: str = "url_hash",
-              capacity: int | None = None, fp_rate: float = 0.01,
-              n_buckets: int = 32) -> "PartitionedBloom":
-        if capacity is None:
-            capacity = seen.count()
-        per_bucket = max(64, capacity // n_buckets + 1)
-        m, k = bloom_params(per_bucket, fp_rate)
-
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            bucket = int(pdf["bucket"].iloc[0])
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            h = pdf[hash_col].to_numpy(dtype=np.int64)
-            _set_bits(bits, _positions(h, m, k))
-            return pd.DataFrame({"bucket": [bucket], "bits": [bits.tobytes()]})
-
-        folded = (
-            seen.select(F.col(hash_col))
-            .withColumn("bucket", F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int"))
-            .groupBy("bucket")
-            .applyInPandas(fold, "bucket int, bits binary")
-            .collect()
-        )
-        bits = {r["bucket"]: np.frombuffer(r["bits"], dtype=np.uint8).copy() for r in folded}
-        return cls(n_buckets, m, k, bits)
-
-    def add_hashes(self, hashes: np.ndarray) -> None:
-        buckets = np.mod(hashes.astype(np.int64), self.n_buckets)
-        for b in np.unique(buckets):
-            arr = self.bits.setdefault(int(b), np.zeros(self.m // 8, dtype=np.uint8))
-            _set_bits(arr, _positions(hashes[buckets == b], self.m, self.k))
-
-    def might_contain_np(self, hashes: np.ndarray) -> np.ndarray:
-        out = np.zeros(len(hashes), dtype=bool)
-        if len(hashes) == 0:
-            return out
-        buckets = np.mod(hashes.astype(np.int64), self.n_buckets)
-        for b in np.unique(buckets):
-            arr = self.bits.get(int(b))
-            sel = buckets == b
-            if arr is None:
-                continue
-            out[sel] = _test_bits(arr, _positions(hashes[sel], self.m, self.k))
-        return out
-
-    def prefilter(self, df: DataFrame, hash_col: str = "url_hash") -> DataFrame:
-        """Add boolean ``maybe_seen``; False ⇒ definitely new (skip join)."""
-        spark = df.sparkSession
-        payload = {b: a.tobytes() for b, a in self.bits.items()}
-        bc = spark.sparkContext.broadcast((self.n_buckets, self.m, self.k, payload))
-        fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-
-        def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            n_buckets, m, k, raw = bc.value
-            bloom = PartitionedBloom(
-                n_buckets, m, k,
-                {b: np.frombuffer(v, dtype=np.uint8) for b, v in raw.items()},
-            )
-            for b in batches:
-                b = b.copy()
-                b["maybe_seen"] = bloom.might_contain_np(
-                    b[hash_col].to_numpy(dtype=np.int64)
-                )
-                yield b
-
-        return df.mapInPandas(probe, f"{fields}, maybe_seen boolean")
-
-
 class BloomSidecar:
-    """Incremental, fully distributed partitioned Bloom filter — the engine
-    hot-path form of the north_rule's "partitioned Bloom/cuckoo URL-seen
-    keyed by canonicalized-URL xxhash64".
+    """Incremental, fully distributed partitioned Bloom filter — the
+    north_rule's "partitioned Bloom/cuckoo URL-seen keyed by
+    canonicalized-URL xxhash64" as a standalone operator.
 
-    Unlike :class:`PartitionedBloom` (whose ``build`` collects bucket
-    bit-arrays to the driver — a driver OOM at 10^10 URLs ≈ 12 GiB), the
-    bit-arrays here live as a ``(bucket int, bits binary)`` DataFrame that
-    is never collected:
+    The bit-arrays live as a ``(bucket int, bits binary)`` DataFrame that
+    is never collected (at 10^10 URLs they total ≈ 12 GiB):
 
       - ``add(urls)`` folds the batch's xxhash64 keys per bucket
         (groupBy-bucket Arrow fold) and OR-merges into the existing bits
-        via a same-bucket cogroup; the merged table is eagerly
+        via a same-bucket cogroup; the merged table is lazily
         localCheckpointed (≤ ``n_buckets`` tiny rows) so superstep lineage
         stays flat.
       - ``prefilter(cand)`` meets candidates with their bucket's bit-array
         in a same-key cogroup and flags ``maybe_seen``; False ⇒ definitely
-        new ⇒ the row skips the seen-table anti-join shuffle entirely.
+        new.
 
-    Exactness is preserved unconditionally (Bloom has no false negatives as
-    long as every seen URL was ``add``-ed before the probe — the engine adds
-    the popped batch in the same superstep, before discovery).
+    Bloom has no false negatives as long as every seen URL was ``add``-ed
+    before the probe, so a caller that anti-joins only the maybe-seen
+    slice stays exact.
     """
 
     def __init__(self, spark, capacity: int, fp_rate: float = 0.01,
@@ -229,8 +144,7 @@ class BloomSidecar:
         key so the cogroup reuses that exchange instead of shuffling to the
         session-wide ``spark.sql.shuffle.partitions`` — python-stage cost
         is per partition per job, so small supersteps must not fan a 10^3-
-        row probe across 32 workers (the engine passes its batch-sized
-        partition count)."""
+        row probe across 32 workers."""
         m, k, nb = self.m, self.k, self.n_buckets
         h = F.xxhash64(F.col(url_col))
         keyed = cand.withColumn("__h", h).withColumn(
@@ -263,24 +177,6 @@ class BloomSidecar:
             .cogroup(bits_df.groupBy("bucket"))
             .applyInPandas(probe, f"{fields}, maybe_seen boolean")
         )
-
-
-def anti_join_seen(candidates: DataFrame, seen: DataFrame, url_col: str = "url",
-                   bloom: PartitionedBloom | None = None) -> DataFrame:
-    """Exact new-URL selection: candidates ∖ seen.
-
-    With a Bloom sidecar, only the maybe-seen slice pays the shuffle join;
-    definitely-new rows bypass it (the 10^10-scale fast path).
-    """
-    seen_urls = seen.select(F.col(url_col))
-    if bloom is None:
-        return candidates.join(seen_urls, on=url_col, how="left_anti")
-    with_hash = candidates.withColumn("__h", F.xxhash64(F.col(url_col)))
-    flagged = bloom.prefilter(with_hash, "__h")
-    fresh = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen", "__h")
-    suspect = flagged.filter(F.col("maybe_seen")).drop("maybe_seen", "__h")
-    checked = suspect.join(seen_urls, on=url_col, how="left_anti")
-    return fresh.unionByName(checked)
 
 
 # ---------------------------------------------------------------------------

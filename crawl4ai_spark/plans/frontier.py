@@ -25,8 +25,10 @@ Scale notes (the 100 TB design):
   - every per-level global ordering uses ``with_global_seq`` (range
     partition + offset assign), never a single-partition window;
   - the seen table is append-only and anti-joined on the canonical URL
-    (hash-partitioned); a PartitionedBloom sidecar can prefilter the probe
-    side (operators/seen.py);
+    (hash-partitioned).  That exact left-anti join is the only URL-seen
+    check: a filter sidecar (operators/seen.py) only shrinks the candidate
+    side, while the join still scans and shuffles the whole seen table, so
+    its extra Python stages never paid on the benchmark workloads;
   - the queue pop is ``orderBy(...).limit(B)`` = distributed TakeOrdered,
     and queue subtraction is an anti-join on ``push_seq`` (multiset-exact);
   - fetch joins are hash joins on the canonical fetch key; the pages/links
@@ -67,7 +69,6 @@ from ..operators.politeness import (
     with_salted_host_slots,
 )
 from ..operators.robots import robots_gate, robots_gate_df
-from ..operators.seen import BloomSidecar
 from .checkpoint import SnapshotStore
 
 _BIG = 1 << 62  # stands in for math.inf page budgets in long arithmetic
@@ -105,18 +106,6 @@ class CrawlConfig:
     superstep_window_s: float = 10.0  # virtual wall-clock of one superstep
     max_retries: int = 3  # async_dispatcher.py:35
     seed: int = 42  # deterministic backoff jitter (north_rule parity)
-    # T6: Bloom URL-seen sidecar (north_rule mandate; sizing crazy.py:53,
-    # 112-120).  None disables; capacity is the expected |seen| — overflow
-    # only raises the FP (extra exact-join probes), never wrong results.
-    bloom_capacity: int | None = 1 << 20
-    bloom_fp_rate: float = 0.01
-    bloom_buckets: int = 32
-    # which sidecar structure guards the seen-table anti-join: "bloom"
-    # (pure-add, vectorized bit ops) or "cuckoo" (deletable fingerprints —
-    # pair with recrawl-TTL eviction); both are exact-by-construction
-    # prefilters, results are identical.  bloom_capacity None disables
-    # either.
-    seen_filter: str = "bloom"
     # D7: hosts with more than this many frontier rows in one superstep are
     # salted across salt_buckets sub-partitions (execution-only: the budget
     # split and slot ranks stay exactly the unsalted semantics).
@@ -191,7 +180,6 @@ class CrawlEngine:
             F.col("image_id"),
         )
         self.links = links  # src_url, pos, href, is_internal
-        self.bloom: BloomSidecar | None = None  # set per-run in run()
         # one background lane for the per-superstep results write (job
         # submission is thread-safe on a SparkSession); joined before the
         # superstep's persisted inputs unpersist
@@ -288,22 +276,14 @@ class CrawlEngine:
         return self._fetch_prepared(self._prepare(frontier, n_rows))
 
     def _mark_seen(self, seen: DataFrame, new_urls: DataFrame) -> DataFrame:
-        """Append to the URL-seen table AND the Bloom sidecar — the sidecar
-        must hold every seen URL before any discovery probe (no false
-        negatives ⇒ the prefilter stays exact).  Lazy checkpoint: the union
+        """Append to the URL-seen table.  Lazy checkpoint: the union
         materializes inside the same superstep's discovery/commit job
         instead of paying its own job launch; its lineage is two
         already-checkpointed inputs either way."""
         # dedup before marking: the same URL can sit twice in one
         # superstep (duplicate-URL quirk) — without this, every dup costs
-        # a redundant seen-table row AND a sidecar slot the cuckoo
-        # capacity sizing never budgeted (repeated re-adds saturate
-        # shards and flip their sticky overflow flag)
-        new = new_urls.distinct()
-        seen = seen.unionByName(new).localCheckpoint(eager=False)
-        if self.bloom is not None:
-            self.bloom.add(new, url_col="url")
-        return seen
+        # a redundant seen-table row
+        return seen.unionByName(new_urls.distinct()).localCheckpoint(eager=False)
 
     def _retry_rows(self, fetched: DataFrame, domain_state: DataFrame,
                     superstep: int) -> DataFrame:
@@ -440,26 +420,13 @@ class CrawlEngine:
             # score_threshold lives in the BFS-family discovery only
             # (bfs_strategy.py:116-119; applies even with no scorer, score=0)
             cand = cand.filter(F.col("score") >= F.lit(cfg.score_threshold))
-        # URL-seen anti-join (T6): seen state as of superstep start.  With
-        # the Bloom sidecar (north_rule mandate) definitely-new candidates
-        # skip the seen-table shuffle join entirely; only the maybe-seen
-        # slice (true dups + ~fp_rate) pays the exact left_anti — at 10^10
-        # seen URLs that join's probe side shrinks to the dup fraction.
+        # URL-seen (T6): one exact left_anti join on the canonical URL
+        # against the seen state as of superstep start.  No filter sidecar
+        # guards it: a candidate-side prefilter would still leave this join
+        # scanning and shuffling the whole seen table, so it only adds
+        # Python stages (operators/seen.py keeps the filters standalone).
         seen_t = seen.select(F.col("url").alias("target"))
-        if self.bloom is not None:
-            # lazy localCheckpoint: both union branches read the SAME
-            # materialization of the cogroup probe (first job caches it;
-            # blocks are GC-released with the plan) instead of running the
-            # canonicalize→cogroup pipeline twice
-            nparts = self._parts(est_rows) if est_rows is not None else None
-            flagged = self.bloom.prefilter(
-                cand, "target", num_partitions=nparts
-            ).localCheckpoint(eager=False)
-            fresh = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-            suspect = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-            cand = fresh.unionByName(suspect.join(seen_t, "target", "left_anti"))
-        else:
-            cand = cand.join(seen_t, on="target", how="left_anti")
+        cand = cand.join(seen_t, on="target", how="left_anti")
         if pending is not None:
             # queued-but-unfetched rows (budget-deferred / backoff-waiting /
             # retries) are not in seen yet; exclude them exactly so a URL
@@ -586,8 +553,6 @@ class CrawlEngine:
             domain_state = state.get("domain_state")
             if domain_state is None:
                 domain_state = empty_domain_state_df(spark)
-            if self.bloom is not None:
-                self.bloom.add(seen.select("url"))
         else:
             frontier = spark.createDataFrame(
                 [(u, None, 0, i, 0.0, 0, 0) for i, u in enumerate(seeds)],
@@ -817,8 +782,6 @@ class CrawlEngine:
             domain_state = state.get("domain_state")
             if domain_state is None:
                 domain_state = empty_domain_state_df(spark)
-            if self.bloom is not None:
-                self.bloom.add(seen.select("url"))
         else:
             queue = spark.createDataFrame(
                 [(0.0, 0, u, None, i, 0, 0) for i, u in enumerate(seeds)],
@@ -894,8 +857,7 @@ class CrawlEngine:
                 superstep += 1
                 continue
             # attempt>0 rows are retries whose url was marked seen at
-            # their first pop — re-marking would re-add them to the
-            # sidecar once per retry
+            # their first pop — re-marking would append them again
             seen = self._mark_seen(
                 seen, batch.filter(F.col("attempt") == 0).select("url"))
             if budget is not None:
@@ -1167,22 +1129,6 @@ class CrawlEngine:
 
     # ---------------------------------------------------------- helpers
     def run(self, seeds: list[str], resume: bool = False) -> CrawlRun:
-        cfg = self.cfg
-        # DFS is the sequential parity-only path (one URL per superstep) —
-        # a per-pop Bloom fold would just add jobs; scale strategies get
-        # the sidecar.
-        if cfg.bloom_capacity and cfg.strategy != "dfs":
-            if cfg.seen_filter == "cuckoo":
-                from ..operators.seen import CuckooSidecar
-
-                self.bloom = CuckooSidecar(
-                    self.spark, cfg.bloom_capacity, n_shards=cfg.bloom_buckets)
-            else:
-                self.bloom = BloomSidecar(
-                    self.spark, cfg.bloom_capacity, cfg.bloom_fp_rate,
-                    cfg.bloom_buckets)
-        else:
-            self.bloom = None
         if self.cfg.strategy == "bfs":
             return self.run_bfs(seeds, resume=resume)
         if self.cfg.strategy == "best_first":

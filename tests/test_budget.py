@@ -64,6 +64,14 @@ def test_apportion_rejects_bad_inputs(spark):
         apportion_budget(w2, -1)
 
 
+def test_apportion_rejects_negative_weight(spark):
+    # the weights still sum > 0, so only the per-weight check catches it
+    w = spark.createDataFrame(
+        [("a", 5), ("b", -1), ("c", 3)], "host string, weight long")
+    with pytest.raises(ValueError, match=">= 0"):
+        apportion_budget(w, 10)
+
+
 def test_yield_report_rates(spark):
     log = spark.createDataFrame(
         [("h1", True, 10, 4), ("h1", True, 0, 0), ("h1", False, 6, 6),

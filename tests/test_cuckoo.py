@@ -64,29 +64,3 @@ def test_cuckoo_saturation_degrades_safe(spark):
     ck.add(_urls(spark, 0, 5000))
     rows = ck.prefilter(_urls(spark, 0, 5000), "url").collect()
     assert all(r["maybe_seen"] for r in rows)
-
-
-def test_cuckoo_crawl_parity(spark):
-    """BFS crawl with the cuckoo sidecar == bloom sidecar == identical
-    results and URL-seen set (both prefilters are exact by construction)."""
-    from crawl4ai_spark.plans.frontier import CrawlConfig, deep_crawl
-    from crawl4ai_spark.sources.synth import GraphParams, synth_local, url_of
-    from tests.test_crawl_parity import SCORER
-
-    PARAMS = GraphParams(n_pages=60, n_domains=4, mean_degree=5, seed=42)
-    pages, links, _ = synth_local(PARAMS)
-    pages_df = spark.createDataFrame(pages)
-    links_df = spark.createDataFrame(links)
-    seeds = [url_of(0, PARAMS)]
-    runs = {}
-    for filt in ("bloom", "cuckoo"):
-        cfg = CrawlConfig(strategy="bfs", max_depth=2, max_pages=20,
-                          scorer=SCORER, seen_filter=filt,
-                          bloom_capacity=1 << 14)
-        run = deep_crawl(spark, seeds, pages_df, links_df, cfg)
-        runs[filt] = (
-            [(r["url"], r["depth"], r["parent"], r["success"])
-             for r in run.results.collect()],
-            {r["url"] for r in run.seen.collect()},
-        )
-    assert runs["bloom"] == runs["cuckoo"]

@@ -1,7 +1,6 @@
 """Politeness slots/budget/backoff invariants (async_dispatcher.py:30-87
-semantics) and URL-seen bloom/anti-join correctness."""
+semantics) and the URL-seen Bloom sidecar's sizing and exactness."""
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +12,7 @@ from crawl4ai_spark.operators.politeness import (
     update_domain_state,
     with_host_slots,
 )
-from crawl4ai_spark.operators.seen import PartitionedBloom, anti_join_seen, bloom_params
+from crawl4ai_spark.operators.seen import bloom_params
 
 
 def _frontier(spark, n=60):
@@ -85,30 +84,6 @@ def test_salting_splits_hot_host(spark):
     hot_parts = {p for p in parts if p.startswith("hot.test#")}
     assert len(hot_parts) > 1  # hot host fans out
     assert "a.test" in parts and "b.test" in parts  # cold hosts untouched
-
-
-def test_bloom_no_false_negatives_and_prefilter(spark):
-    seen_urls = [(f"https://s.test/{i}",) for i in range(500)]
-    seen = spark.createDataFrame(seen_urls, "url string").withColumn(
-        "url_hash", F.xxhash64("url")
-    )
-    bloom = PartitionedBloom.build(seen, capacity=500, n_buckets=8)
-    # no false negatives: every seen hash must report maybe_seen
-    hashes = np.array([r["url_hash"] for r in seen.collect()], dtype=np.int64)
-    assert bloom.might_contain_np(hashes).all()
-    # candidates: 300 dups + 300 new → anti-join equals exact result
-    cand = spark.createDataFrame(
-        [(f"https://s.test/{i}",) for i in range(200, 800)], "url string"
-    )
-    exact = {r["url"] for r in anti_join_seen(cand, seen).collect()}
-    with_bloom = {r["url"] for r in anti_join_seen(cand, seen, bloom=bloom).collect()}
-    assert with_bloom == exact == {f"https://s.test/{i}" for i in range(500, 800)}
-    # FP rate sane on fresh keys
-    fresh = np.array(
-        [hash(f"x{i}") % (1 << 63) for i in range(2000)], dtype=np.int64
-    )
-    fp = bloom.might_contain_np(fresh).mean()
-    assert fp < 0.05, fp
 
 
 def test_bloom_sizing_formula():
@@ -408,6 +383,52 @@ def test_ip_budget_split_multi_a_record_host_keys_once(spark):
     assert got["multi.test"]["n_hosts_on_ip"] == 2
     assert got["multi.test"]["granted"] == 2
     assert got["other.test"]["granted"] == 2
+
+
+def test_ip_budget_split_duplicate_budget_rows_key_once(spark):
+    from crawl4ai_spark.operators.politeness import ip_budget_split
+
+    hosts = spark.createDataFrame([("a.test",), ("b.test",)], "host string")
+    dns = spark.createDataFrame(
+        [("a.test", "1.1.1.1"), ("b.test", "1.1.1.1")], "host string, ip string")
+    # duplicate, conflicting budget rows for one ip
+    budgets = spark.createDataFrame(
+        [("1.1.1.1", 6), ("1.1.1.1", 2)], "ip string, budget long")
+    rows = ip_budget_split(hosts, dns, ip_budget=99, budgets=budgets).collect()
+    # one row per host, the ip's two hosts, and the conservative budget
+    assert sorted(r["host"] for r in rows) == ["a.test", "b.test"]
+    assert all(r["n_hosts_on_ip"] == 2 and r["ip_budget"] == 2 for r in rows)
+    assert sum(r["granted"] for r in rows) == 2
+
+
+def _conflicting_delay_dim(spark):
+    return spark.createDataFrame(
+        [("a.test", 1.0), ("a.test", 3.0), ("b.test", 2.0)],
+        "host string, delay_s double")
+
+
+def test_host_slots_conflicting_delay_rows_take_max(spark):
+    df = spark.createDataFrame(
+        [(f"https://a.test/p{i}", "a.test", i) for i in range(4)],
+        "url string, host string, seq long")
+    out = with_host_slots(df, _conflicting_delay_dim(spark),
+                          order_cols=["seq"]).collect()
+    assert len(out) == 4
+    assert sorted(r["send_at_s"] for r in out) == [0.0, 3.0, 6.0, 9.0]
+
+
+def test_salted_host_slots_conflicting_delay_rows_take_max(spark):
+    from crawl4ai_spark.operators.politeness import with_salted_host_slots
+
+    df = spark.createDataFrame(
+        [(f"https://a.test/p{i}", "a.test", i) for i in range(40)],
+        "url string, host string, seq long")
+    out = with_salted_host_slots(
+        df, _conflicting_delay_dim(spark), order_cols=["seq"],
+        hot_hosts=["a.test"], salt_buckets=4).collect()
+    assert len(out) == 40
+    assert all(r["send_at_s"] == r["host_rank"] * 3.0 for r in out)
+    assert any(r["host_rank"] > 0 for r in out)
 
 
 def test_age_priorities_breaks_starvation_in_pop_loop(spark):

@@ -1,7 +1,7 @@
 """Engine ⇄ oracle parity for the SCHEDULED superstep features wired into
 run_bfs this round: politeness budget (D1 deferral), 429/503 backoff with
-retry requeue (D2), robots gating under budget, hot-host salting
-(execution-only), and the Bloom URL-seen sidecar (exactness-preserving).
+retry requeue (D2), robots gating under budget, and hot-host salting
+(execution-only).
 
 The oracle twin is crawl_bfs_scheduled (oracle/crawler.py) — the documented
 batch translation of async_dispatcher.py:30-87 — so "parity" here means the
@@ -126,13 +126,6 @@ def test_salting_keeps_parity(spark, world):
     cfg = CrawlConfig(strategy="bfs", max_depth=2, politeness_budget=3,
                       hot_host_rows=2, salt_buckets=4)
     _check(spark, world, spec, cfg, politeness=gen_politeness(PARAMS))
-
-
-def test_bloom_disabled_same_results(spark, world):
-    spec = ScheduleSpec(strategy="bfs", max_depth=2, politeness_budget=3)
-    cfg = CrawlConfig(strategy="bfs", max_depth=2, politeness_budget=3,
-                      bloom_capacity=None)
-    _check(spark, world, spec, cfg)
 
 
 def test_budget_preserves_plain_coverage(spark, world):

@@ -64,7 +64,7 @@ def main() -> None:
 
     if "--crawl" in sys.argv:
         # full scheduled deep crawl through the shipped package: budget
-        # deferral + backoff retries + bloom URL-seen, multi-seed BFS
+        # deferral + backoff retries + URL-seen anti-join, multi-seed BFS
         from crawl4ai_spark.plans.frontier import CrawlConfig, deep_crawl
 
         pages, links2, _ = synth.synth_tables(spark, p)

@@ -5,6 +5,13 @@ exists, the same query in DuckDB over the identical parquet tables; compares
 row count, column-name set, and an order-insensitive value hash (columns
 sorted by name, rows sorted, values stringified with float canonicalization).
 
+It also lints each oracle's column types: a HUGEINT, UHUGEINT or DECIMAL
+oracle column whose Spark twin is integral fails the probe.  DuckDB types
+an un-CAST ``sum()`` of integers HUGEINT, and a pandas fetch renders such
+values as ``2.0`` where Spark renders ``2``, so the hashes can agree here
+and still disagree in a pandas-based comparison.  CAST those columns to
+BIGINT in the oracle SQL.
+
 Usage: python tools/verify_oracle.py [sf_dir] [query ...]
 """
 
@@ -18,6 +25,22 @@ import time
 sys.path.insert(0, ".")
 
 import duckdb
+
+_INTEGRAL_SPARK = {"tinyint", "smallint", "int", "bigint"}
+_WIDE_DUCK = ("HUGEINT", "UHUGEINT", "DECIMAL")
+
+
+def wide_int_columns(spark_types: dict[str, str],
+                     duck_types: dict[str, str]) -> list[str]:
+    """Oracle columns typed HUGEINT/UHUGEINT/DECIMAL whose Spark twin is
+    integral.  Both maps are column name → type name (Spark
+    ``simpleString``, DuckDB type string)."""
+    return sorted(
+        c for c, t in duck_types.items()
+        if t.upper().startswith(_WIDE_DUCK)
+        and spark_types.get(c) in _INTEGRAL_SPARK
+    )
+
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -79,6 +102,7 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
+            stypes = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
@@ -91,9 +115,10 @@ def main() -> int:
                 print(f"  WARN {name}: 0 rows")
             continue
         try:
-            cur = con.execute(oracles[name])
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
+            rel = con.sql(oracles[name])
+            ocols = rel.columns
+            otypes = dict(zip(ocols, (str(t) for t in rel.types)))
+            orows = rel.fetchall()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: duckdb error: {e}")
             failures.append(name)
@@ -103,12 +128,16 @@ def main() -> int:
         sh = frame_hash(scols, srows)
         oh = frame_hash(ocols, orows)
         ok_hash = sh == oh
-        status = "OK  " if (ok_cols and ok_count and ok_hash) else "FAIL"
+        wide = wide_int_columns(stypes, otypes)
+        status = "OK  " if (ok_cols and ok_count and ok_hash and not wide) else "FAIL"
         print(
             f"{status}  {name}: spark={len(srows)} duck={len(orows)} "
             f"cols={'ok' if ok_cols else f'{sorted(scols)} vs {sorted(ocols)}'} "
             f"hash={'ok' if ok_hash else f'{sh} vs {oh}'} ({spark_s:.1f}s)"
         )
+        for c in wide:
+            print(f"    lint: oracle column {c} is {otypes[c]}, "
+                  f"Spark twin {stypes[c]}: CAST it to BIGINT")
         if status == "FAIL":
             failures.append(name)
             if ok_cols and not ok_hash:
