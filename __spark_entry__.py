@@ -214,6 +214,73 @@ def _freshness_url():
 
 _FRESHNESS_URL_SQL = "'https://ex.test/blog/' || CAST(o_orderkey % 7 + 1992 AS VARCHAR) || '/item.html'"
 
+# trap_report oracle over a relation u(host, url): url_trap_signals' path/
+# query split re-derived with DuckDB string/list functions
+_TRAP_REPORT_SQL = """
+sig AS (
+  SELECT host, depth, qpos > 0 AS has_query,
+         len(list_filter(list_distinct(segs),
+             d -> len(list_filter(segs, x -> x = d)) >= 3)) > 0
+           AS seg_repeat,
+         len(list_filter(segs,
+             s -> regexp_full_match(s, '[0-9]+'))) >= 2
+           AS calendar_like,
+         depth >= 6 AS deep
+  FROM (
+    SELECT host,
+           len(list_filter(string_split(path, '/'), s -> s <> ''))
+             AS depth,
+           list_filter(string_split(path, '/'), s -> s <> '')
+             AS segs,
+           qpos
+    FROM (
+      SELECT host,
+             CASE WHEN strpos(path_q, '?') > 0
+                  THEN substr(path_q, 1, strpos(path_q, '?') - 1)
+                  ELSE path_q END AS path,
+             qpos
+      FROM (
+        -- the path starts at the first '/' only when no '?'
+        -- precedes it: 'h.test?next=/login' has path '/'
+        SELECT host, qpos,
+               CASE WHEN slash > 0 AND (qpos = 0 OR slash < qpos)
+                    THEN substr(after, slash)
+                    ELSE '/' END AS path_q
+        FROM (
+          SELECT host, after, strpos(after, '/') AS slash,
+                 strpos(after, '?') AS qpos
+          FROM (SELECT host, string_split(url, '://')[-1] AS after
+                FROM u))))))
+SELECT host, CAST(count(*) AS BIGINT) AS n_urls,
+       CAST(max(depth) AS BIGINT) AS max_depth,
+       CAST(sum(CAST(has_query AS BIGINT)) AS BIGINT) AS n_param,
+       CAST(sum(CAST(seg_repeat AS BIGINT)) AS BIGINT) AS n_repeat,
+       CAST(sum(CAST(calendar_like AS BIGINT)) AS BIGINT)
+         AS n_calendar,
+       CAST(sum(CAST(deep AS BIGINT)) AS BIGINT) AS n_deep,
+       CAST((10000 * sum(CAST(has_query AS BIGINT))) // count(*)
+         AS BIGINT) AS param_share_bp,
+       CAST((10000 * sum(CAST(seg_repeat AS BIGINT))) // count(*)
+         AS BIGINT) AS repeat_share_bp,
+       CAST((10000 * sum(CAST(calendar_like AS BIGINT))) // count(*)
+         AS BIGINT) AS calendar_share_bp,
+       CAST((10000 * sum(CAST(deep AS BIGINT))) // count(*)
+         AS BIGINT) AS deep_share_bp,
+       CAST(greatest(
+         (10000 * sum(CAST(has_query AS BIGINT))) // count(*),
+         (10000 * sum(CAST(seg_repeat AS BIGINT))) // count(*),
+         (10000 * sum(CAST(calendar_like AS BIGINT))) // count(*),
+         (10000 * sum(CAST(deep AS BIGINT))) // count(*))
+         AS BIGINT) AS trap_score_bp,
+       greatest(
+         (10000 * sum(CAST(has_query AS BIGINT))) // count(*),
+         (10000 * sum(CAST(seg_repeat AS BIGINT))) // count(*),
+         (10000 * sum(CAST(calendar_like AS BIGINT))) // count(*),
+         (10000 * sum(CAST(deep AS BIGINT))) // count(*)) >= 2500
+         AS is_trap
+FROM sig GROUP BY host
+"""
+
 
 # --------------------------------------------------------------------------
 # Flagship
@@ -3060,66 +3127,7 @@ def oracle_sql() -> dict[str, str]:
                    ELSE '/page/p' || CAST(doc_id AS VARCHAR)
                  END AS url
           FROM documents),
-        sig AS (
-          SELECT host, depth, qpos > 0 AS has_query,
-                 len(list_filter(list_distinct(segs),
-                     d -> len(list_filter(segs, x -> x = d)) >= 3)) > 0
-                   AS seg_repeat,
-                 len(list_filter(segs,
-                     s -> regexp_full_match(s, '[0-9]+'))) >= 2
-                   AS calendar_like,
-                 depth >= 6 AS deep
-          FROM (
-            SELECT host,
-                   len(list_filter(string_split(path, '/'), s -> s <> ''))
-                     AS depth,
-                   list_filter(string_split(path, '/'), s -> s <> '')
-                     AS segs,
-                   qpos
-            FROM (
-              SELECT host,
-                     CASE WHEN qpos > 0
-                          THEN substr(path_q, 1, qpos - 1)
-                          ELSE path_q END AS path,
-                     qpos
-              FROM (
-                SELECT host, path_q, strpos(path_q, '?') AS qpos
-                FROM (
-                  SELECT host,
-                         CASE WHEN strpos(after, '/') > 0
-                              THEN substr(after, strpos(after, '/'))
-                              ELSE '/' END AS path_q
-                  FROM (SELECT host, split_part(url, '://', 2) AS after
-                        FROM u))))))
-        SELECT host, CAST(count(*) AS BIGINT) AS n_urls,
-               CAST(max(depth) AS BIGINT) AS max_depth,
-               CAST(sum(CAST(has_query AS BIGINT)) AS BIGINT) AS n_param,
-               CAST(sum(CAST(seg_repeat AS BIGINT)) AS BIGINT) AS n_repeat,
-               CAST(sum(CAST(calendar_like AS BIGINT)) AS BIGINT)
-                 AS n_calendar,
-               CAST(sum(CAST(deep AS BIGINT)) AS BIGINT) AS n_deep,
-               CAST((10000 * sum(CAST(has_query AS BIGINT))) // count(*)
-                 AS BIGINT) AS param_share_bp,
-               CAST((10000 * sum(CAST(seg_repeat AS BIGINT))) // count(*)
-                 AS BIGINT) AS repeat_share_bp,
-               CAST((10000 * sum(CAST(calendar_like AS BIGINT))) // count(*)
-                 AS BIGINT) AS calendar_share_bp,
-               CAST((10000 * sum(CAST(deep AS BIGINT))) // count(*)
-                 AS BIGINT) AS deep_share_bp,
-               CAST(greatest(
-                 (10000 * sum(CAST(has_query AS BIGINT))) // count(*),
-                 (10000 * sum(CAST(seg_repeat AS BIGINT))) // count(*),
-                 (10000 * sum(CAST(calendar_like AS BIGINT))) // count(*),
-                 (10000 * sum(CAST(deep AS BIGINT))) // count(*))
-                 AS BIGINT) AS trap_score_bp,
-               greatest(
-                 (10000 * sum(CAST(has_query AS BIGINT))) // count(*),
-                 (10000 * sum(CAST(seg_repeat AS BIGINT))) // count(*),
-                 (10000 * sum(CAST(calendar_like AS BIGINT))) // count(*),
-                 (10000 * sum(CAST(deep AS BIGINT))) // count(*)) >= 2500
-                 AS is_trap
-        FROM sig GROUP BY host
-    """
+    """ + _TRAP_REPORT_SQL
 
     o["caption_gate"] = r"""
         WITH c AS (

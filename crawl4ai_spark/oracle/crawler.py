@@ -203,15 +203,18 @@ def crawl_dfs(graph: OracleGraph, start_url: str, spec: CrawlSpec):
 
 
 def crawl_dfs_batched(graph: OracleGraph, start_url: str, spec: CrawlSpec):
-    """Batched "DFS-ish" twin (engine run_dfs_batched): pop the DEEPEST
-    ``batch_size`` stack entries per superstep, fetch them as one level,
-    push children reversed per parent in pop order — children of the
-    earliest-popped (deepest) parent pop first, first-discovered link
-    first (dfs_strategy.py:57-60 reversal, batched).
+    """Batched "DFS-ish" twin (engine stack pop policy, strategy
+    ``dfs_batched``): pop the DEEPEST ``batch_size`` stack entries per
+    superstep, fetch them as one level, push children reversed per parent
+    in pop order — children of the earliest-popped (deepest) parent pop
+    first, first-discovered link first (dfs_strategy.py:57-60 reversal,
+    batched).
 
     Deliberately NOT strict DFS: strict ordering needs one fetch at a
-    time (crawl_dfs / engine run_dfs, the parity-only path); this mode
-    trades sibling-before-child strictness for batch-parallel fetches.
+    time (crawl_dfs); this mode trades sibling-before-child strictness for
+    batch-parallel fetches, and it stops popping once ``max_pages`` pages
+    were crawled, where crawl_dfs keeps draining its stack — so even
+    ``batch_size=1`` equals crawl_dfs only while the budget never binds.
     Page counting and capacity are level-style: remaining is computed
     once per superstep from the whole batch's successes (the reference
     BFS quirk, bfs_strategy.py:87-90), and already-seen stack entries
@@ -368,9 +371,10 @@ def crawl(graph: OracleGraph, start_url: str, spec: CrawlSpec):
 # at module top (functions.*) are shared deliberately: each is anchored to
 # the REFERENCE's own golden tables by tests/test_canonical.py,
 # test_filters_golden.py and test_scorers_golden.py, so sharing them cannot
-# mask an engine bug.  Mirrors plans/frontier.py run_bfs row for row,
-# including result (superstep, seq) conventions, so its output is the
-# expected table for the engine's bfs/robots/backoff probes.
+# mask an engine bug.  Mirrors the level (BFS) pop policy of the superstep
+# kernel in plans/frontier.py row for row, including result (superstep,
+# seq) conventions, so its output is the expected table for the engine's
+# bfs/robots/backoff probes.
 # ---------------------------------------------------------------------------
 
 import math
@@ -652,9 +656,10 @@ def crawl_bfs_scheduled(graph: OracleGraph, seeds: list[str],
 
 def crawl_best_first_scheduled(graph: OracleGraph, seeds: list[str],
                                spec: ScheduleSpec, robots_pdf=None):
-    """Engine twin of run_best_first's scheduled loop (D1 budget deferral
-    back to the queue, D2 retry re-push, robots gate).  Returns (results,
-    seen) with the engine's result columns ordered by seq."""
+    """Engine twin of the heap (best-first) pop policy's scheduled loop
+    (D1 budget deferral back to the queue, D2 retry re-push, robots gate).
+    Returns (results, seen) with the engine's result columns ordered by
+    seq."""
     allowed = (
         robots_allower(robots_pdf, spec.user_agent)
         if robots_pdf is not None

@@ -1,16 +1,27 @@
 """The deep-crawl engine: traversal loops as DataFrame supersteps.
 
-Each reference traversal loop (SURVEY §2.5) becomes a driver-side loop whose
-body is ONE declarative DataFrame DAG per superstep:
+Every reference traversal loop (SURVEY §2.5) runs as ONE superstep kernel
+(``CrawlEngine._run``) whose body is one declarative DataFrame DAG per
+superstep: pop → mark-seen → robots/politeness gates + fetch → persist
+results → link discovery → push → commit → log.  Restore, the D1 budget
+split, D2 backoff, the end-of-superstep frontier agg, snapshot commits and
+the metrics record are shared; a pop policy (``PopPolicy``) supplies only
+what differs:
 
-  BFS  (bfs_strategy.py:141-187) — superstep = one level: mark-seen →
-       fetch → append results → link_discovery dataflow → next level.
-  BF   (bff_strategy.py:127-199) — superstep = one priority-queue pop of
-       ``batch_size`` (10 in parity mode, millions at scale): TakeOrdered
-       pop → anti-join visited → fetch → cumulative-capacity discovery →
-       push.
-  DFS  (dfs_strategy.py:15-62) — inherently sequential (one URL per pop);
-       implemented for parity completeness, not a scale target.
+  level (BFS, bfs_strategy.py:141-187) — pop every eligible row in
+       (depth, seq) order; no visited check at pop; discovery on canonical
+       URLs, excluding rows still queued (pending anti-join).
+  heap  (best-first, bff_strategy.py:127-199) — pop ``batch_size`` rows
+       (10 in parity mode, millions at scale) by TakeOrdered on the heap
+       key; visited check at pop (retries exempt); discovery on raw hrefs
+       with cumulative remaining capacity.
+  stack (DFS, dfs_strategy.py:15-62) — pop the ``k`` deepest stack rows
+       (``seq`` desc); visited check at pop; discovered links pushed
+       reversed per parent.  ``dfs_batched`` pops ``batch_size`` rows,
+       strict ``dfs`` one.
+
+Heap and stack stop popping once ``max_pages`` pages were crawled; level
+and strict DFS drain their frontier, as the reference loops do.
 
 Link discovery (bfs_strategy.py:68-139 / bff_strategy.py:76-125) is the
 same dataflow both ways:
@@ -29,8 +40,9 @@ Scale notes (the 100 TB design):
     check: a filter sidecar (operators/seen.py) only shrinks the candidate
     side, while the join still scans and shuffles the whole seen table, so
     its extra Python stages never paid on the benchmark workloads;
-  - the queue pop is ``orderBy(...).limit(B)`` = distributed TakeOrdered,
-    and queue subtraction is an anti-join on ``push_seq`` (multiset-exact);
+  - the heap/stack pop is ``orderBy(...).limit(B)`` = distributed
+    TakeOrdered, and queue subtraction is an anti-join on the unique queue
+    key ``seq``;
   - fetch joins are hash joins on the canonical fetch key; the pages/links
     tables would be Iceberg-bucketed by that key in production so the join
     co-locates without shuffle;
@@ -89,12 +101,12 @@ class CrawlConfig:
     include_external: bool = False
     filters: list[FilterSpec] = field(default_factory=list)
     scorer: ScorerSpec | None = None
-    batch_size: int = 10  # best-first pop size (bff_strategy.py:18)
+    batch_size: int = 10  # best-first/dfs_batched pop size (bff_strategy.py:18)
     check_robots_txt: bool = False  # async_configs.py:713 default False
     # D1: per-host per-superstep fetch cap (= floor(superstep_window/delay)
     # in production).  Overflow rows are DEFERRED to the next superstep —
     # the batch translation of RateLimiter's per-domain sleep
-    # (async_dispatcher.py:44-65).  BFS-family only; None disables.
+    # (async_dispatcher.py:44-65).  BFS and best-first only; None disables.
     politeness_budget: int | None = None
     # D2: 429/503 backoff loop (async_dispatcher.py:67-87).  When True the
     # engine folds per-host RateLimiter state after every superstep,
@@ -125,9 +137,65 @@ class CrawlConfig:
     # broadcast-joined back — never a per-row fetch.
     fetch_ssl_certificate: bool = False
 
+    def __post_init__(self):
+        if self.strategy not in ("bfs", "best_first", "dfs", "dfs_batched"):
+            raise ValueError(f"unknown strategy {self.strategy!r}")
+        for name, ok in (
+            ("batch_size >= 1", self.batch_size >= 1),
+            ("max_depth >= 0", self.max_depth >= 0),
+            ("max_retries >= 0", self.max_retries >= 0),
+            ("superstep_window_s > 0", self.superstep_window_s > 0),
+            ("salt_buckets >= 1", self.salt_buckets >= 1),
+            ("politeness_budget >= 1",
+             self.politeness_budget is None or self.politeness_budget >= 1),
+        ):
+            if not ok:
+                raise ValueError(f"CrawlConfig needs {name}")
+        if self.strategy in ("dfs", "dfs_batched") and (
+                self.politeness_budget is not None or self.backoff):
+            # no oracle twin defines a scheduled DFS
+            raise ValueError(
+                f"{self.strategy} supports neither politeness_budget nor backoff")
+
     @property
     def page_budget(self) -> int:
         return _BIG if self.max_pages is None else int(self.max_pages)
+
+
+@dataclass(frozen=True)
+class PopPolicy:
+    """What one traversal's superstep pops — the only per-strategy part
+    of the kernel.  ``kind`` is level | heap | stack (module docstring);
+    ``k`` is the heap/stack pop size; ``stop_at_budget`` ends the crawl
+    once max_pages pages were crawled instead of draining the frontier
+    (a fact of each strategy's semantics, not a user option)."""
+
+    kind: str
+    k: int = 0
+    stop_at_budget: bool = False
+
+    @classmethod
+    def of(cls, cfg: CrawlConfig) -> "PopPolicy":
+        return {
+            "bfs": cls("level"),
+            "best_first": cls("heap", cfg.batch_size, True),
+            "dfs_batched": cls("stack", cfg.batch_size, True),
+            "dfs": cls("stack", 1),
+        }[cfg.strategy]
+
+    def order(self) -> list:
+        """Pop order: the budget split ranks by it, and heap/stack number
+        their results by it."""
+        if self.kind == "heap":
+            # the reference heap key (score, depth, url, parent), made
+            # total by the push id
+            return [
+                F.col("score").asc(), F.col("depth").asc(), F.col("url").asc(),
+                F.col("parent").asc_nulls_first(), F.col("seq").asc(),
+            ]
+        if self.kind == "stack":
+            return [F.col("seq").desc()]
+        return ["depth", "seq"]
 
 
 @dataclass
@@ -143,10 +211,11 @@ RESULT_COLS = [
     "score", "success", "status_code", "attempt", "image_id",
 ]
 
-# BFS frontier row: ``seq`` is the GLOBAL enqueue sequence (seeds first,
-# then discovery order), stable across budget deferral and retries — it is
-# also the emitted result ``seq``.  ``attempt`` counts backoff retries;
-# ``ready`` is the earliest superstep the row may fetch in.
+# Frontier row, one schema for every strategy: ``seq`` is the queue key, a
+# global enqueue id stable across budget deferral and retries (BFS: seeds
+# first, then discovery order, and also the emitted result ``seq``; heap:
+# the push id; stack: higher pops first).  ``attempt`` counts backoff
+# retries; ``ready`` is the earliest superstep the row may fetch in.
 FRONTIER_COLS = ["url", "parent", "depth", "seq", "score", "attempt", "ready"]
 FRONTIER_SCHEMA = (
     "url string, parent string, depth int, seq long, score double, "
@@ -209,13 +278,10 @@ class CrawlEngine:
         )
         return [r["h"] for r in rows if r["h"]]
 
-    def _prepare(self, frontier: DataFrame, n_rows: int | None = None,
-                 hot_hosts: list[str] | None = None) -> DataFrame:
+    def _prepare(self, frontier: DataFrame, n_rows: int,
+                 hot_hosts: list[str]) -> DataFrame:
         """Canonical fetch key + host, partitioned for the fetch stage."""
-        f = frontier
-        if "attempt" not in f.columns:
-            f = f.withColumn("attempt", F.lit(0))
-        f = f.withColumn(
+        f = frontier.withColumn(
             "fetch_key", canonical_col(F.col("url"), F.col("url"))
         ).withColumn("host", F.lower(host_of(F.col("fetch_key"))))
         # Hash-partition on host, sized to the batch: (a) breaks the
@@ -225,17 +291,13 @@ class CrawlEngine:
         # (Window.partitionBy(host) reuses this exchange — no extra
         # shuffle); (c) hot hosts fan out over salted sub-keys so one
         # domain can never pin a whole task (D7).
-        if n_rows is not None:
-            if hot_hosts:
-                f = salt_hot_hosts(f, hot_hosts, self.cfg.salt_buckets,
-                                   url_col="url")
-                f = f.repartition(self._parts(n_rows), "host_part").drop("host_part")
-            else:
-                f = f.repartition(self._parts(n_rows), "host")
-        return f
+        if hot_hosts:
+            f = salt_hot_hosts(f, hot_hosts, self.cfg.salt_buckets,
+                               url_col="url")
+            return f.repartition(self._parts(n_rows), "host_part").drop("host_part")
+        return f.repartition(self._parts(n_rows), "host")
 
-    def _fetch_prepared(self, f: DataFrame,
-                        hot_hosts: list[str] | None = None) -> DataFrame:
+    def _fetch(self, f: DataFrame, hot_hosts: list[str]) -> DataFrame:
         """S2/P8/D1: robots gate → politeness slots → synthetic fetch join.
 
         The synthetic fetch resolves any raw URL to its canonical page
@@ -272,9 +334,6 @@ class CrawlEngine:
             .otherwise(F.coalesce(F.col("page_status"), F.lit(0))),
         ).drop("page_success", "page_status")
 
-    def _fetch(self, frontier: DataFrame, n_rows: int | None = None) -> DataFrame:
-        return self._fetch_prepared(self._prepare(frontier, n_rows))
-
     def _mark_seen(self, seen: DataFrame, new_urls: DataFrame) -> DataFrame:
         """Append to the URL-seen table.  Lazy checkpoint: the union
         materializes inside the same superstep's discovery/commit job
@@ -286,39 +345,18 @@ class CrawlEngine:
         return seen.unionByName(new_urls.distinct()).localCheckpoint(eager=False)
 
     def _retry_rows(self, fetched: DataFrame, domain_state: DataFrame,
-                    superstep: int) -> DataFrame:
-        """D2 requeue: rate-limited rows re-enter the frontier with
-        attempt+1, eligible after the host's folded backoff delay
-        (ceil(current_delay / superstep_window_s) supersteps); rows on
-        gave-up hosts and rows out of attempts are final (reference error
-        'Rate limit retry count exceeded', async_dispatcher.py:364-366).
+                    superstep: int, key: str) -> DataFrame:
+        """D2 requeue: rate-limited rows re-enter the frontier under their
+        queue key ``key`` with attempt+1, eligible after the host's folded
+        backoff delay (ceil(current_delay / superstep_window_s)
+        supersteps); rows on gave-up hosts and rows out of attempts are
+        final (reference error 'Rate limit retry count exceeded',
+        async_dispatcher.py:364-366).
 
         ``domain_state`` is a DataFrame keyed by host (never driver
         pandas); the join shuffles on host — AQE broadcast-converts it
         while the state is small, and at 10^8 hosts it stays a
         distributed hash join."""
-        j, ready = self._retry_base(fetched, domain_state, superstep)
-        return j.select(
-            "url", "parent", "depth", "seq", "score",
-            (F.col("attempt") + 1).alias("attempt"), ready,
-        )
-
-    def _retry_rows_bf(self, fetched: DataFrame, domain_state: DataFrame,
-                       superstep: int) -> DataFrame:
-        """D2 requeue for best-first: same rule as _retry_rows but the row
-        returns to the QUEUE with its original push_seq (it re-pops in heap
-        order once ready)."""
-        j, ready = self._retry_base(fetched, domain_state, superstep)
-        return j.select(
-            "score", "depth", "url", "parent", "push_seq",
-            (F.col("attempt") + 1).alias("attempt"), ready,
-        )
-
-    def _retry_base(self, fetched: DataFrame, domain_state: DataFrame,
-                    superstep: int):
-        """Shared D2 requeue core (rate-limit filter → state join →
-        give-up screen → backoff-steps arithmetic); one place so the
-        BFS and best-first rules can never silently diverge."""
         cfg = self.cfg
         failed = fetched.filter(
             F.col("status_code").isin(list(RATE_LIMIT_CODES))
@@ -334,7 +372,11 @@ class CrawlEngine:
                 / F.lit(float(cfg.superstep_window_s))
             ).cast("long"),
         )
-        return j, (F.lit(superstep) + steps).alias("ready")
+        return j.select(
+            "url", "parent", "depth", F.col(key).alias("seq"), "score",
+            (F.col("attempt") + 1).alias("attempt"),
+            (F.lit(superstep) + steps).alias("ready"),
+        )
 
     # -------------------------------------------------------- discovery
     def _discover(
@@ -342,26 +384,28 @@ class CrawlEngine:
         fetched: DataFrame,
         seen: DataFrame,
         remaining_expr,
-        next_depth_expr,
         canonicalize: bool,
         base_seq: int,
-        seq_col: str = "seq",
-        est_rows: int | None = None,
+        est_rows: int,
         pending: DataFrame | None = None,
+        reverse: bool = False,
     ) -> DataFrame:
         """link_discovery as a dataflow (bfs_strategy.py:68-139 with
         canonicalize=True; bff_strategy.py:76-125 with canonicalize=False).
 
         ``remaining_expr`` is the per-parent remaining-capacity column
-        (constant per level for BFS, cumulative within batch for BF).
-        ``next_depth_expr`` is parent depth + 1.
+        (constant per superstep for BFS/DFS, cumulative within the batch
+        for best-first).  Discovered rows get dense seqs from ``base_seq``
+        in (parent seq, link order); ``reverse`` hands them out backwards
+        so a stack pops the first-discovered link first
+        (dfs_strategy.py:57-60).
         """
         cfg = self.cfg
         src = fetched.filter(F.col("success")).select(
-            F.col(seq_col).alias("parent_seq"),
+            F.col("seq").alias("parent_seq"),
             F.col("url").alias("parent_url"),
             F.col("fetch_key").alias("parent_key"),
-            next_depth_expr.alias("link_depth"),
+            (F.col("depth") + 1).alias("link_depth"),
             remaining_expr.alias("remaining"),
         )
         src = src.filter(F.col("link_depth") <= F.lit(cfg.max_depth))  # :88-90
@@ -456,10 +500,11 @@ class CrawlEngine:
             F.col("parent_seq"),
             F.col("rn"),
         )
-        nparts = self._parts(est_rows) if est_rows is not None else None
+        key = ([F.col("parent_seq").desc(), F.col("rn").desc()] if reverse
+               else ["parent_seq", "rn"])
         return with_global_seq(
-            out, ["parent_seq", "rn"], out_col="seq", start=base_seq,
-            num_partitions=nparts,
+            out, key, out_col="seq", start=base_seq,
+            num_partitions=self._parts(est_rows),
         ).drop("parent_seq", "rn")
 
     # ----------------------------------------------------------- resume
@@ -496,80 +541,94 @@ class CrawlEngine:
             else p
             for p in parts
         ]
-        dstate_df = self.store.read_one(self.spark, "domain_state", s)
+        parts = [p for p in parts if p is not None]
+        if "attempt" not in frontier.columns:  # pre-D2 checkpoint
+            frontier = frontier.withColumn("attempt", F.lit(0)).withColumn(
+                "ready", F.lit(0).cast("long")
+            )
+        counters = dict(mf["counters"])
+        if counters.get("enq_base") is None:
+            # pre-enq_base checkpoint: seed from max(seq) over the
+            # restored frontier + results so the first post-resume
+            # discovery can't mint seqs colliding with historical ones
+            seqs = frontier.select("seq")
+            for p in parts:
+                seqs = seqs.unionByName(p.select("seq"))
+            mx = seqs.agg(F.max("seq")).collect()[0][0]
+            counters["enq_base"] = int(mx) + 1 if mx is not None else 0
+        domain_state = self.store.read_one(self.spark, "domain_state", s)
+        if domain_state is None:
+            domain_state = empty_domain_state_df(self.spark)
         return {
             "superstep": s + 1,
             "frontier": frontier,
             "seen": seen,
-            "result_parts": [p for p in parts if p is not None],
-            "counters": mf["counters"],
-            "domain_state": dstate_df,  # DataFrame (never driver pandas)
+            "result_parts": parts,
+            "counters": counters,
+            "domain_state": domain_state,  # DataFrame (never driver pandas)
+            "n_frontier": frontier.count(),
         }
 
-    # ------------------------------------------------------------- BFS
-    def run_bfs(self, seeds: list[str], resume: bool = False) -> CrawlRun:
-        """BFS superstep loop with the full D1/D2/D7/T6 schedule wired in.
+    def _fresh(self, pop: PopPolicy, seeds: list[str]) -> dict:
+        """Superstep-0 state: the seeds at depth 0 with queue keys in seed
+        order (a stack gets them reversed, so the first seed pops first)."""
+        n = len(seeds)
+        frontier = self.spark.createDataFrame(
+            [(u, None, 0, n - 1 - i if pop.kind == "stack" else i, 0.0, 0, 0)
+             for i, u in enumerate(seeds)],
+            FRONTIER_SCHEMA,
+        )
+        if pop.kind == "stack" and self.cfg.scorer is not None:
+            # DFS results carry each page's own score (dfs_strategy.py:
+            # 40-45); discovered rows are scored on push, seeds here
+            frontier = frontier.withColumn(
+                "score", self.cfg.scorer.column(F.col("url")).cast("double"))
+        return {
+            "superstep": 0,
+            "frontier": frontier,
+            "seen": self.spark.createDataFrame([], "url string"),
+            "result_parts": [],
+            "counters": {"pages_crawled": 0, "enq_base": n, "result_base": 0},
+            "domain_state": empty_domain_state_df(self.spark),
+            "n_frontier": n,
+        }
 
-        Scheduled semantics (oracle twin: oracle/crawler.py
-        crawl_bfs_scheduled; plain BFS with budget/backoff off is exactly
-        bfs_strategy.py:141-187):
+    # ----------------------------------------------------------- kernel
+    def _run(self, pop: PopPolicy, seeds: list[str],
+             resume: bool = False) -> CrawlRun:
+        """The superstep kernel every traversal runs: pop → mark-seen →
+        robots/politeness gates + fetch → persist results → discover →
+        push → commit → log.  ``pop`` supplies only what differs between
+        the traversals (see PopPolicy).
 
-          - frontier rows carry a global enqueue seq; fetch order within a
-            superstep is (depth asc, seq asc) — strict BFS priority;
-          - D1 budget: each host fetches its first `budget` rows per
-            superstep (ranked pre-robots); the rest defer intact;
+        Scheduled semantics (oracle twins: crawl_bfs_scheduled,
+        crawl_best_first_scheduled, crawl_dfs_batched, crawl_dfs):
+
+          - frontier rows carry a queue key ``seq`` (BFS: the global
+            enqueue id, which is also the result seq; heap/stack: the push
+            id, and results are numbered densely in pop order);
+          - D1 budget: each host fetches its first `budget` popped rows
+            per superstep in pop order; the rest return to the frontier
+            intact and UNMARKED;
           - D2 backoff: rate-limited rows requeue with attempt+1 at
-            ready = superstep + ceil(host_delay / window); gave-up hosts
-            stop retrying; empty-eligible supersteps fast-forward;
+            ready = superstep + ceil(host_delay / window) under their own
+            queue key; gave-up hosts stop retrying; supersteps with nothing
+            eligible fast-forward;
           - visited marks at fetch time (failures included,
-            bfs_strategy.py:161); deferred/waiting rows are excluded from
-            discovery via the pending anti-join instead;
-          - results = (superstep, seq) with seq the enqueue id; ordering
-            (superstep, depth, seq).
+            bfs_strategy.py:161), once per URL: a retry's URL is already
+            marked from its first attempt.
         """
         cfg = self.cfg
-        spark = self.spark
-        state = self._restore() if resume else None
-        if state is not None:
-            frontier = state["frontier"]
-            if "attempt" not in frontier.columns:  # pre-D2 checkpoint
-                frontier = frontier.withColumn("attempt", F.lit(0)).withColumn(
-                    "ready", F.lit(0).cast("long")
-                )
-            seen = state["seen"]
-            pages_crawled = state["counters"]["pages_crawled"]
-            enq_base = state["counters"].get("enq_base")
-            superstep = state["superstep"]
-            result_parts = state["result_parts"]
-            if enq_base is None:
-                # pre-enq_base checkpoint: seed from max(seq) over the
-                # restored frontier + results so the first post-resume
-                # discovery can't mint seqs colliding with historical ones
-                seqs = frontier.select("seq")
-                for p in result_parts:
-                    seqs = seqs.unionByName(p.select("seq"))
-                mx = seqs.agg(F.max("seq")).collect()[0][0]
-                enq_base = int(mx) + 1 if mx is not None else 0
-            domain_state = state.get("domain_state")
-            if domain_state is None:
-                domain_state = empty_domain_state_df(spark)
-        else:
-            frontier = spark.createDataFrame(
-                [(u, None, 0, i, 0.0, 0, 0) for i, u in enumerate(seeds)],
-                FRONTIER_SCHEMA,
-            )
-            seen = spark.createDataFrame([], "url string")
-            pages_crawled = 0
-            enq_base = len(seeds)
-            superstep = 0
-            result_parts = []
-            domain_state = empty_domain_state_df(spark)
+        st = (self._restore() if resume else None) or self._fresh(pop, seeds)
+        frontier, seen = st["frontier"], st["seen"]
+        superstep, result_parts = st["superstep"], st["result_parts"]
+        domain_state = st["domain_state"]
+        pages_crawled = st["counters"]["pages_crawled"]
+        enq_base = st["counters"]["enq_base"]
+        result_base = st["counters"].get("result_base", 0)
+        n_frontier = st["n_frontier"]
         budget = cfg.politeness_budget
-        if budget is not None and budget < 1:
-            raise ValueError("politeness_budget must be >= 1")
-        # frontier size carried across supersteps (the end-of-superstep agg
-        # already counts the next frontier — no extra count job per loop)
-        n_frontier = len(seeds) if state is None else frontier.count()
+        order = pop.order()
         # end-of-superstep hint (from the fused frontier agg): eligible
         # count at superstep+1, earliest ready, per-raw-host max and
         # empty-host count.  Kills the per-loop eligible-count job and the
@@ -582,6 +641,8 @@ class CrawlEngine:
         while superstep < cfg.max_supersteps:
             if n_frontier == 0:
                 break
+            if pop.stop_at_budget and pages_crawled >= cfg.page_budget:
+                break  # bff :146-149
             hint_ok = hint is not None and hint["for"] == superstep
             if cfg.backoff:
                 n_elig = (
@@ -597,14 +658,32 @@ class CrawlEngine:
                     hint = None
                     continue
                 eligible = frontier.filter(F.col("ready") <= F.lit(superstep))
-                waiting = frontier.filter(F.col("ready") > F.lit(superstep))
-                n_wait = n_frontier - n_elig
             else:
-                eligible, waiting = frontier, None
-                n_elig, n_wait = n_frontier, 0
+                eligible, n_elig = frontier, n_frontier
+            n_wait = n_frontier - n_elig
             t0 = time.time()
-            hot = self._hot_hosts(eligible, n_elig)
-            prep = self._prepare(eligible, n_rows=n_elig, hot_hosts=hot)
+            popped = None
+            if pop.kind == "level":
+                # the whole eligible frontier is one level
+                batch, n_rows = eligible, n_elig
+                rest = (frontier.filter(F.col("ready") > F.lit(superstep))
+                        if cfg.backoff else None)
+            else:
+                popped = eligible.orderBy(*order).limit(pop.k).persist(
+                    StorageLevel.MEMORY_AND_DISK)
+                rest = frontier.join(popped.select("seq"), "seq", "left_anti")
+                # visited check at pop consumes batch slots (bff :153-160,
+                # dfs_strategy.py:35): drop already-visited rows (retries
+                # exempt), then keep the first row per URL in pop order
+                fresh = popped.filter(F.col("attempt") == 0).join(
+                    seen, "url", "left_anti")
+                batch = fresh.unionByName(popped.filter(F.col("attempt") > 0))
+                batch = batch.withColumn("__r", F.row_number().over(
+                    Window.partitionBy("url").orderBy(*order))
+                ).filter(F.col("__r") == 1).drop("__r")
+                n_rows = pop.k
+            hot = self._hot_hosts(batch, n_rows)
+            prep = self._prepare(batch, n_rows, hot)
             # skip the checkpoint + window split when the hint proves no
             # host holds more than `budget` frontier rows (the split would
             # defer nothing) — the common steady-state for wide crawls
@@ -615,25 +694,33 @@ class CrawlEngine:
             if budget is not None and not skip_split:
                 prep = prep.localCheckpoint(eager=True)
                 within, deferred = split_host_budget(
-                    prep, budget, ["depth", "seq"], hot_hosts=hot,
+                    prep, budget, order, hot_hosts=hot,
                     salt_buckets=cfg.salt_buckets, url_col="url",
                 )
                 deferred = deferred.select(*FRONTIER_COLS)
-                marked = within.select("url")
+                marked = within
             else:
-                within, deferred = prep, None
-                marked = eligible.select("url")
+                within, deferred, marked = prep, None, batch
             # T6: mark visited BEFORE fetch (bfs_strategy.py:161) — the
             # URL-seen set includes failed fetches; budget-deferred rows
             # are not seen until actually fetched.
-            seen = self._mark_seen(seen, marked)
+            seen = self._mark_seen(
+                seen, marked.filter(F.col("attempt") == 0).select("url"))
+            if pop.kind != "level":
+                # results are numbered densely in pop order; the queue
+                # key rides along as qseq for the retry requeue
+                within = with_global_seq(
+                    within, order, out_col="rseq", start=result_base,
+                    num_partitions=self._parts(pop.k),
+                ).withColumnRenamed("seq", "qseq").withColumnRenamed("rseq", "seq")
             t_split = time.time()
-            fetched = self._fetch_prepared(within, hot_hosts=hot)
-            # duplicate-URL quirk (bfs_strategy.py:174): every result of a
-            # URL that appears twice in a superstep reports the parent of
-            # the FIRST (lowest enqueue seq) entry for that URL.
-            wfirst = Window.partitionBy("url").orderBy("seq")
-            fetched = fetched.withColumn("parent", F.first("parent").over(wfirst))
+            fetched = self._fetch(within, hot_hosts=hot)
+            if pop.kind == "level":
+                # duplicate-URL quirk (bfs_strategy.py:174): every result
+                # of a URL that appears twice in a superstep reports the
+                # parent of the FIRST (lowest enqueue seq) entry for it.
+                wfirst = Window.partitionBy("url").orderBy("seq")
+                fetched = fetched.withColumn("parent", F.first("parent").over(wfirst))
             fetched = fetched.persist(StorageLevel.MEMORY_AND_DISK)
             stat = fetched.agg(
                 F.count("*").alias("n"),
@@ -644,6 +731,11 @@ class CrawlEngine:
             n_within = int(stat["n"])
             n_success = int(stat["ok"] or 0)
             min_succ_depth = stat["dmin"]
+            n_deferred = (
+                n_elig - n_within if pop.kind == "level"
+                else 0 if deferred is None else deferred.count()
+            )
+            pages_before = pages_crawled
             pages_crawled += n_success
             results_s = fetched.withColumn("superstep", F.lit(superstep)).select(RESULT_COLS)
             # non-blocking: the results write (a job over the persisted
@@ -661,35 +753,49 @@ class CrawlEngine:
                     max_retries=cfg.max_retries,
                     num_partitions=self._parts(n_within),
                 ).localCheckpoint(eager=False)
-                retries = self._retry_rows(fetched, domain_state, superstep)
-            pending = None
-            for part in (deferred, waiting, retries):
+                retries = self._retry_rows(
+                    fetched, domain_state, superstep,
+                    "seq" if pop.kind == "level" else "qseq")
+            carried = None
+            for part in (deferred, rest, retries):
                 if part is not None:
                     part = part.select(*FRONTIER_COLS)
-                    pending = part if pending is None else pending.unionByName(part)
+                    carried = part if carried is None else carried.unionByName(part)
             remaining = cfg.page_budget - pages_crawled
+            # best-first counts pages as they land (bff :146-149): the
+            # batch's i-th success leaves budget - (pages_before + i)
+            cap_max = remaining + n_success - 1 if pop.kind == "heap" else remaining
+            nxt = carried
             if (
-                n_success > 0 and remaining > 0 and min_succ_depth is not None
+                n_success > 0 and cap_max > 0 and min_succ_depth is not None
                 and int(min_succ_depth) + 1 <= cfg.max_depth
             ):
-                nxt = self._discover(
-                    fetched,
-                    seen,
-                    remaining_expr=F.lit(remaining),
-                    next_depth_expr=F.col("depth") + 1,
-                    canonicalize=True,
-                    base_seq=enq_base,
-                    est_rows=n_elig * 8,
-                    pending=pending,
+                if pop.kind == "heap":
+                    # two-pass distributed cumsum, NOT Window.orderBy("seq")
+                    # — an unpartitioned window funnels the whole batch
+                    # through one task
+                    src = with_global_cumsum(
+                        fetched, ["seq"], "success", out_col="cum_succ",
+                        num_partitions=self._parts(pop.k),
+                    )
+                    cap = F.lit(cfg.page_budget - pages_before) - F.col("cum_succ")
+                else:
+                    src, cap = fetched, F.lit(remaining)
+                pushes = self._discover(
+                    src, seen, remaining_expr=cap,
+                    canonicalize=pop.kind != "heap",
+                    base_seq=enq_base, est_rows=n_rows * 8,
+                    # heap/stack: queued duplicates are consumed by the
+                    # visited check at pop, as in the reference
+                    pending=carried if pop.kind == "level" else None,
+                    reverse=pop.kind == "stack",
                 ).withColumn("attempt", F.lit(0)).withColumn(
                     "ready", F.lit(0).cast("long")
                 ).select(*FRONTIER_COLS)
-            else:
+                nxt = pushes if carried is None else carried.unionByName(pushes)
+            if nxt is None:
                 nxt = frontier.limit(0).select(*FRONTIER_COLS)
-            if pending is not None:
-                nxt = pending.unionByName(nxt)
             # lazy checkpoint: the fused agg below is the materializing job
-            # (the old eager checkpoint + separate count was two jobs)
             nxt = nxt.localCheckpoint(eager=False)
             # anchored host extract for the skip-split guard: host_of's
             # bare '://([^/]+)' would pull a "host" out of a query string
@@ -714,6 +820,7 @@ class CrawlEngine:
             ).collect()[0]
             n_next = int(nstat["n"] or 0)
             enq_base = max(enq_base, int(nstat["mx"] if nstat["mx"] is not None else -1) + 1)
+            result_base += n_within
             hint = {
                 "for": superstep + 1,
                 "nready": int(nstat["nready"] or 0),
@@ -726,7 +833,7 @@ class CrawlEngine:
             t_results = time.time()
             self._log(
                 superstep=superstep, popped=n_within, eligible=n_elig,
-                deferred=n_elig - n_within, waiting=n_wait,
+                deferred=n_deferred, waiting=n_wait,
                 successes=n_success, pages_crawled=pages_crawled,
                 frontier_out=n_next, hot_hosts=len(hot),
                 budget_split_skipped=bool(skip_split),
@@ -740,404 +847,22 @@ class CrawlEngine:
             )
             self._commit(superstep, frontier=nxt, seen=seen,
                          counters={"pages_crawled": pages_crawled,
-                                   "enq_base": enq_base},
+                                   "enq_base": enq_base,
+                                   "result_base": result_base},
                          domain_state=domain_state if cfg.backoff else None)
             fetched.unpersist()
+            if popped is not None:  # consumed by the frontier checkpoint
+                popped.unpersist()
             frontier = nxt
             n_frontier = n_next
             superstep += 1
-        return self._finish(result_parts, seen, pages_crawled,
-                            order=["superstep", "depth", "seq"])
+        return self._finish(
+            result_parts, seen, pages_crawled,
+            order=["superstep", "depth", "seq"] if pop.kind == "level" else ["seq"],
+        )
 
-    # ------------------------------------------------------------- BF
-    def run_best_first(self, seeds: list[str], resume: bool = False) -> CrawlRun:
-        """Best-first superstep loop with the same D1/D2 schedule as
-        run_bfs (oracle twin: crawl_best_first_scheduled):
-
-          - D1 budget: the post-dedup popped batch splits per host (first
-            `budget` in heap order); deferred rows return to the queue
-            UNMARKED with their push_seq, so they re-pop in heap order;
-          - D2 backoff: rate-limited rows re-push with attempt+1 at their
-            host's ready superstep; retries bypass the visited check at
-            pop (their url is already seen from the failed attempt);
-          - re-discovered URLs of deferred queue rows are NOT excluded —
-            queue multisets with duplicate URLs are reference BF behavior
-            (visited check at pop consumes the dup, bff :153-160)."""
-        cfg = self.cfg
-        spark = self.spark
-        state = self._restore() if resume else None
-        if state is not None:
-            queue = state["frontier"]
-            if "attempt" not in queue.columns:  # pre-D2 checkpoint
-                queue = queue.withColumn("attempt", F.lit(0)).withColumn(
-                    "ready", F.lit(0).cast("long")
-                )
-            queue = queue.localCheckpoint(eager=True)
-            seen = state["seen"]
-            pages_crawled = state["counters"]["pages_crawled"]
-            push_seq_base = state["counters"]["push_seq_base"]
-            result_seq_base = state["counters"]["result_seq_base"]
-            superstep = state["superstep"]
-            result_parts = state["result_parts"]
-            domain_state = state.get("domain_state")
-            if domain_state is None:
-                domain_state = empty_domain_state_df(spark)
-        else:
-            queue = spark.createDataFrame(
-                [(0.0, 0, u, None, i, 0, 0) for i, u in enumerate(seeds)],
-                "score double, depth int, url string, parent string, "
-                "push_seq long, attempt int, ready long",
-            ).localCheckpoint(eager=True)
-            seen = spark.createDataFrame([], "url string")
-            pages_crawled = 0
-            push_seq_base = len(seeds)
-            result_seq_base = 0
-            superstep = 0
-            result_parts = []
-            domain_state = empty_domain_state_df(spark)
-        QUEUE_COLS = ["score", "depth", "url", "parent", "push_seq",
-                      "attempt", "ready"]
-        budget = cfg.politeness_budget
-        if budget is not None and budget < 1:
-            raise ValueError("politeness_budget must be >= 1")
-        heap_order = [
-            F.col("score").asc(), F.col("depth").asc(), F.col("url").asc(),
-            F.col("parent").asc_nulls_first(), F.col("push_seq").asc(),
-        ]
-        while superstep < cfg.max_supersteps:
-            if pages_crawled >= cfg.page_budget:  # bff :146-149
-                break
-            if not queue.take(1):
-                break
-            if cfg.backoff:
-                eligible = queue.filter(F.col("ready") <= F.lit(superstep))
-                if not eligible.take(1):
-                    superstep = int(queue.agg(F.min("ready")).collect()[0][0])
-                    continue
-            else:
-                eligible = queue
-            t0 = time.time()
-            popped = eligible.orderBy(*heap_order).limit(cfg.batch_size).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            rest = queue.join(popped.select("push_seq"), "push_seq", "left_anti")
-            # visited check at pop consumes batch slots (bff :153-160):
-            # drop already-visited (retries exempt), then first-in-heap-order
-            # per duplicate URL
-            fresh0 = popped.filter(F.col("attempt") == 0).join(seen, "url", "left_anti")
-            batch = fresh0.unionByName(popped.filter(F.col("attempt") > 0))
-            wdup = Window.partitionBy("url").orderBy(
-                F.col("score"), F.col("depth"), F.col("parent").asc_nulls_first(),
-                F.col("push_seq"),
-            )
-            batch = batch.withColumn("__r", F.row_number().over(wdup)).filter(
-                F.col("__r") == 1
-            ).drop("__r")
-            deferred = None
-            if budget is not None:
-                prep = self._prepare(batch, n_rows=cfg.batch_size).localCheckpoint(
-                    eager=True
-                )
-                batch, deferred = split_host_budget(
-                    prep, budget, heap_order, url_col="url",
-                )
-                deferred = deferred.select(*QUEUE_COLS)
-            batch = with_global_seq(
-                batch,
-                ["score", "depth", "url", F.col("parent").asc_nulls_first(), "push_seq"],
-                out_col="seq",
-                start=result_seq_base,
-                num_partitions=self._parts(cfg.batch_size),
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            if not batch.take(1):
-                queue = rest if deferred is None else rest.unionByName(deferred)
-                queue = queue.localCheckpoint(eager=True)
-                popped.unpersist()
-                batch.unpersist()  # all-duplicate superstep: release too
-                superstep += 1
-                continue
-            # attempt>0 rows are retries whose url was marked seen at
-            # their first pop — re-marking would append them again
-            seen = self._mark_seen(
-                seen, batch.filter(F.col("attempt") == 0).select("url"))
-            if budget is not None:
-                fetched = self._fetch_prepared(batch)
-            else:
-                fetched = self._fetch(batch, n_rows=cfg.batch_size)
-            fetched = fetched.persist(StorageLevel.MEMORY_AND_DISK)
-            bstat = fetched.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("success").cast("long")).alias("ok"),
-            ).collect()[0]
-            n_batch = int(bstat["n"])
-            n_success = int(bstat["ok"] or 0)
-            # non-blocking: the results write (a job over the persisted
-            # fetch) overlaps the discovery/queue work below; joined
-            # before fetched.unpersist()
-            results_s = fetched.withColumn(
-                "superstep", F.lit(superstep)
-            ).select(RESULT_COLS)
-            res_future = self._io_pool.submit(
-                self._persist_results, results_s, superstep
-            )
-            retries = None
-            if cfg.backoff:
-                domain_state = fold_domain_state_df(
-                    domain_state, fetched, seed=cfg.seed, superstep=superstep,
-                    max_retries=cfg.max_retries,
-                    num_partitions=self._parts(n_batch),
-                ).localCheckpoint(eager=False)
-                retries = self._retry_rows_bf(fetched, domain_state, superstep)
-            # cumulative successes in batch order → per-result remaining.
-            # Two-pass distributed cumsum (per-partition sums + broadcast
-            # prefix offsets), NOT Window.orderBy("seq") — the unpartitioned
-            # window funnels the whole popped batch through one task, fine
-            # at parity batch_size=10 but a straggler at the
-            # millions-at-scale batch this module promises.
-            fetched_c = with_global_cumsum(
-                fetched, ["seq"], "success", out_col="cum_succ",
-                num_partitions=self._parts(cfg.batch_size),
-            )
-            remaining = (
-                F.lit(cfg.page_budget) - (F.lit(pages_crawled) + F.col("cum_succ"))
-            )
-            pushes = self._discover(
-                fetched_c,
-                seen,
-                remaining_expr=remaining,
-                next_depth_expr=F.col("depth") + 1,
-                canonicalize=False,
-                base_seq=push_seq_base,
-                est_rows=cfg.batch_size * 8,
-            ).withColumnRenamed("seq", "push_seq").select(
-                "score", "depth", "url", "parent", "push_seq"
-            ).withColumn("attempt", F.lit(0)).withColumn(
-                "ready", F.lit(0).cast("long")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            n_pushed = pushes.count()
-            queue = rest.unionByName(pushes)
-            for part in (deferred, retries):
-                if part is not None:
-                    queue = queue.unionByName(part.select(*QUEUE_COLS))
-            queue = queue.localCheckpoint(eager=True)
-            pushes.unpersist()
-            result_parts.append(res_future.result())
-            pages_crawled += n_success
-            push_seq_base += n_pushed
-            result_seq_base += n_batch
-            self._log(
-                superstep=superstep, popped=n_batch, successes=n_success,
-                pages_crawled=pages_crawled, pushed=n_pushed,
-                wall_ms=int((time.time() - t0) * 1000),
-            )
-            self._commit(superstep, frontier=queue, seen=seen,
-                         counters={"pages_crawled": pages_crawled,
-                                   "push_seq_base": push_seq_base,
-                                   "result_seq_base": result_seq_base},
-                         domain_state=domain_state if cfg.backoff else None)
-            popped.unpersist()
-            fetched.unpersist()
-            batch.unpersist()
-            superstep += 1
-        return self._finish(result_parts, seen, pages_crawled, order=["seq"])
-
-    # ------------------------------------------------------------- DFS
-    def run_dfs(self, seeds: list[str]) -> CrawlRun:
-        """Sequential by nature (SURVEY §2.5 T2) — parity mode only."""
-        cfg = self.cfg
-        spark = self.spark
-        stack = spark.createDataFrame(
-            [(u, None, 0, i) for i, u in enumerate(seeds)],
-            "url string, parent string, depth int, stack_seq long",
-        ).localCheckpoint(eager=True)
-        seen = spark.createDataFrame([], "url string")
-        visited_driver: set[str] = set()
-        pages_crawled = 0
-        stack_seq_base = len(seeds)
-        seq = 0
-        superstep = 0
-        result_parts: list[DataFrame] = []
-        while superstep < cfg.max_supersteps:
-            top_rows = stack.orderBy(F.col("stack_seq").desc()).limit(1).collect()
-            if not top_rows:
-                break
-            top = top_rows[0]
-            stack = stack.filter(F.col("stack_seq") != top["stack_seq"])
-            if top["url"] in visited_driver or top["depth"] > cfg.max_depth:
-                # cut lineage on the skip path too: thousands of
-                # consecutive duplicate pops would otherwise chain
-                # un-checkpointed filters into a quadratic driver plan
-                stack = stack.localCheckpoint(eager=True)
-                continue
-            visited_driver.add(top["url"])
-            seen = self._mark_seen(
-                seen, spark.createDataFrame([(top["url"],)], "url string")
-            )
-            one = spark.createDataFrame(
-                [(top["url"], top["parent"], top["depth"], seq, 0.0)],
-                "url string, parent string, depth int, seq long, score double",
-            )
-            fetched = self._fetch(one, n_rows=1)
-            if cfg.scorer is not None:
-                fetched = fetched.withColumn(
-                    "score", cfg.scorer.column(F.col("url")).cast("double")
-                )
-            fetched = fetched.persist(StorageLevel.MEMORY_AND_DISK)
-            is_success = fetched.filter(F.col("success")).count() > 0
-            results_s = fetched.withColumn("superstep", F.lit(superstep)).select(RESULT_COLS)
-            result_parts.append(self._persist_results(results_s, superstep))
-            seq += 1
-            if is_success:
-                pages_crawled += 1
-                remaining = cfg.page_budget - pages_crawled
-                if top["depth"] + 1 <= cfg.max_depth and remaining > 0:
-                    links = self._discover(
-                        fetched, seen,
-                        remaining_expr=F.lit(remaining),
-                        next_depth_expr=F.lit(top["depth"] + 1),
-                        canonicalize=True,
-                        base_seq=0,
-                        est_rows=16,
-                    )
-                    # push reversed (dfs_strategy.py:57-60): first-discovered
-                    # gets the HIGHEST stack_seq so it pops next.
-                    n_links = links.count()
-                    if n_links:
-                        pushes = links.select(
-                            "url", "parent", "depth",
-                            (F.lit(stack_seq_base + n_links - 1) - F.col("seq")).alias("stack_seq"),
-                        )
-                        stack = stack.unionByName(pushes)
-                        stack_seq_base += n_links
-            stack = stack.localCheckpoint(eager=True)
-            fetched.unpersist()
-            superstep += 1
-        return self._finish(result_parts, seen, pages_crawled, order=["seq"])
-
-    def run_dfs_batched(self, seeds: list[str]) -> CrawlRun:
-        """Batched "DFS-ish" loop (oracle twin: crawl_dfs_batched): pop
-        the DEEPEST ``batch_size`` stack entries per superstep
-        (``ORDER BY stack_seq DESC LIMIT k``), fetch them as one parallel
-        stage, push discovered links reversed per parent in pop order —
-        children of the earliest-popped parent receive the highest new
-        stack seqs, so the crawl keeps diving where run_dfs would, at
-        batch_size-way parallelism.
-
-        Strict DFS ordering (child before next sibling) inherently
-        serializes fetches, which is why run_dfs is parity-only; this is
-        the usable-at-scale DFS.  Page counting and capacity are
-        level-style (remaining computed once per superstep from the
-        batch's successes).  Already-seen stack entries DO consume batch
-        slots: the pop takes the top ``batch_size`` entries first and the
-        visited anti-join then discards the stale ones (matching the
-        oracle twin) — a stack top dense with duplicates temporarily
-        lowers the effective fetch parallelism of a superstep."""
-        cfg = self.cfg
-        spark = self.spark
-        stack = spark.createDataFrame(
-            [(u, None, 0, len(seeds) - 1 - i) for i, u in enumerate(seeds)],
-            "url string, parent string, depth int, stack_seq long",
-        ).localCheckpoint(eager=True)
-        seen = spark.createDataFrame([], "url string")
-        pages_crawled = 0
-        stack_seq_base = len(seeds)
-        result_seq_base = 0
-        superstep = 0
-        result_parts: list[DataFrame] = []
-        while superstep < cfg.max_supersteps:
-            if pages_crawled >= cfg.page_budget:
-                break
-            if not stack.take(1):
-                break
-            popped = stack.orderBy(F.col("stack_seq").desc()).limit(
-                cfg.batch_size).persist(StorageLevel.MEMORY_AND_DISK)
-            rest = stack.join(
-                popped.select("stack_seq"), "stack_seq", "left_anti")
-            # discard already-seen entries without consuming batch slots;
-            # within-batch duplicate URLs collapse to the first pop
-            batch = popped.join(seen, "url", "left_anti")
-            wdup = Window.partitionBy("url").orderBy(F.col("stack_seq").desc())
-            batch = batch.withColumn(
-                "__r", F.row_number().over(wdup)
-            ).filter(F.col("__r") == 1).drop("__r")
-            batch = with_global_seq(
-                batch, [F.col("stack_seq").desc()], out_col="seq",
-                start=result_seq_base,
-                num_partitions=self._parts(cfg.batch_size),
-            ).withColumn("score", F.lit(0.0)).persist(
-                StorageLevel.MEMORY_AND_DISK)
-            if not batch.take(1):
-                stack = rest.localCheckpoint(eager=True)
-                popped.unpersist()
-                batch.unpersist()  # all-duplicate superstep: release too
-                superstep += 1
-                continue
-            seen = self._mark_seen(seen, batch.select("url"))
-            fetched = self._fetch(
-                batch.select("url", "parent", "depth", "seq", "score"),
-                n_rows=cfg.batch_size,
-            )
-            if cfg.scorer is not None:
-                fetched = fetched.withColumn(
-                    "score", cfg.scorer.column(F.col("url")).cast("double"))
-            fetched = fetched.persist(StorageLevel.MEMORY_AND_DISK)
-            stat = fetched.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("success").cast("long")).alias("ok"),
-            ).collect()[0]
-            n_batch = int(stat["n"])
-            n_success = int(stat["ok"] or 0)
-            results_s = fetched.withColumn(
-                "superstep", F.lit(superstep)).select(RESULT_COLS)
-            result_parts.append(self._persist_results(results_s, superstep))
-            result_seq_base += n_batch
-            pages_crawled += n_success
-            remaining = cfg.page_budget - pages_crawled
-            pushed = rest
-            links = None
-            if remaining > 0:
-                links = self._discover(
-                    fetched, seen,
-                    remaining_expr=F.lit(remaining),
-                    next_depth_expr=F.col("depth") + 1,
-                    canonicalize=True,
-                    base_seq=0,
-                    est_rows=n_batch * 16,
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                n_links = links.count()
-                if n_links:
-                    # reversal (dfs_strategy.py:57-60, batched): discovery
-                    # seq ascends in (parent pop order, link order), so
-                    # seq 0 gets the HIGHEST new stack_seq and pops next
-                    pushes = links.select(
-                        "url", "parent", "depth",
-                        (F.lit(stack_seq_base + n_links - 1)
-                         - F.col("seq")).alias("stack_seq"),
-                    )
-                    pushed = rest.unionByName(pushes)
-                    stack_seq_base += n_links
-            stack = pushed.localCheckpoint(eager=True)
-            self._log(superstep=superstep, popped=n_batch,
-                      successes=n_success, pages_crawled=pages_crawled)
-            popped.unpersist()
-            batch.unpersist()
-            fetched.unpersist()
-            if links is not None:  # consumed by the stack checkpoint above
-                links.unpersist()
-            superstep += 1
-        return self._finish(result_parts, seen, pages_crawled, order=["seq"])
-
-    # ---------------------------------------------------------- helpers
     def run(self, seeds: list[str], resume: bool = False) -> CrawlRun:
-        if self.cfg.strategy == "bfs":
-            return self.run_bfs(seeds, resume=resume)
-        if self.cfg.strategy == "best_first":
-            return self.run_best_first(seeds, resume=resume)
-        if self.cfg.strategy == "dfs":
-            return self.run_dfs(seeds)
-        if self.cfg.strategy == "dfs_batched":
-            return self.run_dfs_batched(seeds)
-        raise ValueError(f"unknown strategy {self.cfg.strategy!r}")
+        return self._run(PopPolicy.of(self.cfg), seeds, resume=resume)
 
     def _persist_results(self, results_s: DataFrame, superstep: int) -> DataFrame:
         if self.store is not None:

@@ -2,7 +2,9 @@
 last committed snapshot and produces byte-identical results to an
 uninterrupted run; orphan dirs from uncommitted supersteps are cleaned."""
 
+import json
 import os
+import shutil
 
 import pytest
 
@@ -21,61 +23,99 @@ def tables(spark):
 
 def _rows(run):
     return [
-        (r["superstep"], r["url"], r["depth"], r["parent"], r["success"])
+        (r["superstep"], r["seq"], r["url"], r["depth"], r["parent"],
+         r["success"])
         for r in run.results.collect()
     ]
 
 
-def test_bfs_kill_resume(spark, tables, tmp_path):
-    pages_df, links_df = tables
-    seeds = [url_of(0, PARAMS)]
-    cfg_full = CrawlConfig(strategy="bfs", max_depth=3)
-
-    # ground truth: uninterrupted run
-    want = _rows(CrawlEngine(spark, pages_df, links_df, cfg_full).run(seeds))
-
-    # interrupted: stop after 2 supersteps (simulated kill)
-    store = SnapshotStore(str(tmp_path / "ckpt"))
-    cfg_part = CrawlConfig(strategy="bfs", max_depth=3, max_supersteps=2)
-    CrawlEngine(spark, pages_df, links_df, cfg_part, store=store).run(seeds)
-    assert store.last_commit()["superstep"] == 1
-
-    # resume to completion against the same store
-    resumed = CrawlEngine(spark, pages_df, links_df, cfg_full, store=store).run(
-        seeds, resume=True
-    )
-    assert _rows(resumed) == want
-    # metrics snapshots exist per committed superstep
-    assert os.path.isdir(str(tmp_path / "ckpt" / "metrics" / "000000"))
-    # per-partition lineage: one record per part file, rows sum to the
-    # snapshot's actual row count (north_rule lineage requirement)
-    import json
-
-    with open(str(tmp_path / "ckpt" / "metrics" / "000000" / "data.json")) as f:
-        m = json.load(f)
-    lin = m["lineage"]
-    for table in ("results", "frontier", "seen"):
-        snap = store.read_one(spark, table, 0)
-        assert sum(p["rows"] for p in lin[table]) == snap.count()
-        assert all(p["bytes"] > 0 and p["file"].endswith(".parquet")
-                   for p in lin[table])
+# a 429/503-heavy graph on which BFS and best-first defer budget overflow
+# and retry within a few supersteps
+RESUME_PARAMS = GraphParams(n_pages=50, n_domains=4, mean_degree=5,
+                            fail_rate=0.25, seed=3)
+RESUME_CASES = {
+    "bfs": dict(max_depth=1, politeness_budget=2, backoff=True,
+                max_retries=1),
+    "best_first": dict(max_depth=1, max_pages=6, batch_size=4,
+                       politeness_budget=2, backoff=True, max_retries=1),
+    "dfs_batched": dict(max_depth=2, max_pages=4, batch_size=3),
+    "dfs": dict(max_depth=1, max_pages=3),
+}
 
 
-def test_best_first_kill_resume(spark, tables, tmp_path):
-    pages_df, links_df = tables
-    seeds = [url_of(0, PARAMS)]
-    cfg_full = CrawlConfig(strategy="best_first", max_depth=2, max_pages=12)
+@pytest.fixture(scope="module")
+def resume_tables(spark):
+    pages, links, _ = synth_local(RESUME_PARAMS)
+    return spark.createDataFrame(pages).cache(), spark.createDataFrame(links).cache()
 
-    want = _rows(CrawlEngine(spark, pages_df, links_df, cfg_full).run(seeds))
 
-    store = SnapshotStore(str(tmp_path / "ckpt_bf"))
-    cfg_part = CrawlConfig(strategy="best_first", max_depth=2, max_pages=12,
-                           max_supersteps=1)
-    CrawlEngine(spark, pages_df, links_df, cfg_part, store=store).run(seeds)
-    resumed = CrawlEngine(spark, pages_df, links_df, cfg_full, store=store).run(
-        seeds, resume=True
-    )
-    assert _rows(resumed) == want
+class _DiesInCommit(SnapshotStore):
+    """A store whose process dies in ``commit`` of one superstep — after
+    every ``write`` of that superstep landed."""
+
+    def __init__(self, root, at):
+        super().__init__(root)
+        self.at = at
+
+    def commit(self, superstep, counters):
+        if superstep == self.at:
+            raise RuntimeError("killed before commit")
+        super().commit(superstep, counters)
+
+
+@pytest.mark.parametrize("strategy", list(RESUME_CASES))
+def test_every_strategy_resumes_from_every_superstep(
+        spark, resume_tables, tmp_path, strategy):
+    pages_df, links_df = resume_tables
+    seeds = [url_of(0, RESUME_PARAMS)]
+
+    def engine(store=None, **kw):
+        cfg = CrawlConfig(strategy=strategy, **RESUME_CASES[strategy], **kw)
+        return CrawlEngine(spark, pages_df, links_df, cfg, store=store)
+
+    full = engine().run(seeds)
+    want = _rows(full)
+    steps = [m["superstep"] for m in full.metrics]
+    assert len(steps) >= 3, "too few supersteps to interrupt"
+    if strategy in ("bfs", "best_first"):
+        # the snapshots carry deferred rows, retries and host state
+        assert any(m["deferred"] for m in full.metrics)
+        assert full.results.filter("attempt > 0").count() > 0
+
+    # one crawl killed right after every committed superstep but the last
+    # and resumed each time; each kill point is also forked and resumed to
+    # completion
+    root = str(tmp_path / "chain")
+    store = SnapshotStore(root)
+    for s in steps[:-1]:
+        part = engine(store, max_supersteps=s + 1).run(seeds, resume=True)
+        assert store.last_commit()["superstep"] == s
+        assert _rows(part) == [r for r in want if r[0] <= s], s
+        fork = str(tmp_path / f"fork{s}")
+        shutil.copytree(root, fork)
+        resumed = engine(SnapshotStore(fork)).run(seeds, resume=True)
+        assert _rows(resumed) == want, s
+
+    # metrics snapshots exist per committed superstep, with per-partition
+    # lineage: one record per part file, rows sum to the snapshot's actual
+    # row count (north_rule lineage requirement)
+    for s in steps[:-1]:
+        with open(os.path.join(root, "metrics", f"{s:06d}", "data.json")) as f:
+            lin = json.load(f)["lineage"]
+        for table in ("results", "frontier", "seen"):
+            snap = store.read_one(spark, table, s)
+            assert sum(p["rows"] for p in lin[table]) == snap.count()
+            assert all(p["bytes"] > 0 and p["file"].endswith(".parquet")
+                       for p in lin[table])
+
+    # dies in commit after the superstep's writes: the resume drops them
+    root = str(tmp_path / "dies")
+    with pytest.raises(RuntimeError, match="killed before commit"):
+        engine(_DiesInCommit(root, at=steps[1])).run(seeds)
+    store = SnapshotStore(root)
+    assert store.last_commit()["superstep"] == steps[0]
+    assert store.read_one(spark, "results", steps[1]) is not None
+    assert _rows(engine(store).run(seeds, resume=True)) == want
 
 
 def test_orphan_cleanup(spark, tables, tmp_path):

@@ -125,7 +125,10 @@ def test_dfs_batched_parity(spark, spark_tables, oracle_graph,
 
 def test_dfs_batched_batch1_equals_dfs(spark, spark_tables, oracle_graph):
     """batch_size=1 batched DFS visits the same URL set as strict DFS and
-    in strict-DFS order (each superstep pops exactly the stack top)."""
+    in strict-DFS order (each superstep pops exactly the stack top) —
+    here, where max_pages never binds: strict DFS keeps draining its stack
+    once the budget is reached, the batched twin stops (see
+    test_strict_dfs_drains_past_budget)."""
     from crawl4ai_spark.oracle.crawler import crawl, crawl_dfs_batched
 
     spec1 = CrawlSpec(strategy="dfs", max_depth=2, max_pages=20)
@@ -136,3 +139,66 @@ def test_dfs_batched_batch1_equals_dfs(spark, spark_tables, oracle_graph):
         oracle_graph, url_of(0, PARAMS), specb)
     assert [r.url for r in strict] == [w["url"] for w in batched]
     assert strict_seen == batched_seen
+
+
+def test_strict_dfs_drains_past_budget(spark):
+    """Strict DFS stops discovering at max_pages but keeps fetching what is
+    already on its stack (dfs_strategy.py:15-62); batched DFS stops popping.
+    On this graph the two differ even at batch_size=1."""
+    from crawl4ai_spark.oracle.crawler import crawl_dfs, crawl_dfs_batched
+
+    params = GraphParams(n_pages=60, n_domains=4, mean_degree=5, seed=1)
+    pages, links, _ = synth_local(params)
+    graph = OracleGraph.from_frames(pages, links)
+    seed = url_of(0, params)
+    spec = CrawlSpec(strategy="dfs", max_depth=2, max_pages=3)
+    want, want_seen = crawl_dfs(graph, seed, spec)
+    batched, _ = crawl_dfs_batched(
+        graph, seed, CrawlSpec(strategy="dfs_batched", max_depth=2,
+                               max_pages=3, batch_size=1))
+    assert (len(want), sum(r.success for r in want), len(batched)) == (4, 4, 3)
+
+    run = deep_crawl(spark, [seed], spark.createDataFrame(pages),
+                     spark.createDataFrame(links),
+                     CrawlConfig(strategy="dfs", max_depth=2, max_pages=3))
+    assert [(r["url"], r["depth"], r["parent"], r["success"])
+            for r in run.results.collect()] == [
+        (r.url, r.depth, r.parent, r.success) for r in want]
+    assert {r["url"] for r in run.seen.collect()} == want_seen
+    assert run.pages_crawled == 4
+
+
+@pytest.mark.parametrize("kw", [
+    dict(strategy="bfs_typo"),
+    dict(strategy="best_first", batch_size=0),
+    dict(max_depth=-1),
+    dict(max_retries=-1),
+    dict(superstep_window_s=0.0),
+    dict(salt_buckets=0),
+    dict(politeness_budget=0),
+    dict(strategy="dfs", politeness_budget=3),
+    dict(strategy="dfs_batched", backoff=True),
+], ids=lambda kw: "-".join(f"{k}={v}" for k, v in kw.items()))
+def test_config_rejects_invalid(kw):
+    with pytest.raises(ValueError):
+        CrawlConfig(**kw)
+
+
+METRIC_KEYS = {
+    "superstep", "popped", "eligible", "deferred", "waiting", "successes",
+    "pages_crawled", "frontier_out", "hot_hosts", "budget_split_skipped",
+    "wall_ms", "phase_ms",
+}
+
+
+def test_every_strategy_logs_one_metrics_schema(spark, spark_tables):
+    pages_df, links_df = spark_tables
+    for strategy in ("bfs", "best_first", "dfs", "dfs_batched"):
+        cfg = CrawlConfig(strategy=strategy, max_depth=1, max_pages=4,
+                          batch_size=3)
+        run = deep_crawl(spark, [url_of(0, PARAMS)], pages_df, links_df, cfg)
+        assert run.metrics, strategy
+        for m in run.metrics:
+            assert set(m) == METRIC_KEYS, (strategy, sorted(m))
+            assert set(m["phase_ms"]) == {
+                "split", "fetch", "discover", "results_wait"}, strategy

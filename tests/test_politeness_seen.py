@@ -486,3 +486,34 @@ def test_trap_signals_query_before_any_slash(spark):
     r1 = got["https://h.test/a/b?x=1"]
     assert r1["has_query"] is True and r1["path"] == "/a/b"
     assert got["https://h.test?sid=123"]["has_query"] is True
+
+
+def test_trap_report_oracle_matches_operator_on_query_slashes(spark):
+    """The trap_report DuckDB oracle parses paths like url_trap_signals: a
+    '/' inside the query is not a path start, and the host part starts
+    after the LAST '://'."""
+    import duckdb
+
+    from __spark_entry__ import _TRAP_REPORT_SQL
+    from crawl4ai_spark.operators.traps import trap_report
+
+    urls = [
+        "https://h.test?next=/login/2024/11",
+        "https://h.test?next=/a/b/a/b/a/b",
+        "https://h.test/a/b?x=/1/2/3/4/5/6",
+        "https://h.test?sid=123",
+        "https://h.test",
+        "https://h.test/2024/11/post",
+        "https://h.test/p?r=https://o.test/2024/11/x",
+    ]
+    # host := url, so every URL is its own report row
+    rows = [(u, u) for u in urls]
+    want = sorted(
+        tuple(r) for r in trap_report(
+            spark.createDataFrame(rows, "host string, url string")).collect())
+    values = ", ".join(f"('{h}', '{u}')" for h, u in rows)
+    con = duckdb.connect()
+    got = sorted(con.sql(
+        f"WITH u AS (SELECT * FROM (VALUES {values}) t(host, url)),"
+        + _TRAP_REPORT_SQL).fetchall())
+    assert got == want

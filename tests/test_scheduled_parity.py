@@ -1,5 +1,5 @@
-"""Engine ⇄ oracle parity for the SCHEDULED superstep features wired into
-run_bfs this round: politeness budget (D1 deferral), 429/503 backoff with
+"""Engine ⇄ oracle parity for the SCHEDULED superstep features of the BFS
+level policy: politeness budget (D1 deferral), 429/503 backoff with
 retry requeue (D2), robots gating under budget, and hot-host salting
 (execution-only).
 
