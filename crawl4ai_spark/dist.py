@@ -1,4 +1,5 @@
-"""Distributed helpers that avoid single-partition bottlenecks."""
+"""Distributed helpers that avoid single-partition bottlenecks, and
+JVM-local frames that start no Python worker."""
 
 from __future__ import annotations
 
@@ -7,13 +8,26 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def empty_frame(spark, schema: str) -> DataFrame:
+    """An empty DataFrame of the DDL ``schema``, planned in the JVM.
+
+    ``spark.createDataFrame([], schema)`` (and an empty pandas frame) is
+    backed by a PythonRDD under classic PySpark, so every job that reads
+    it starts Python workers to re-serialize no rows."""
+    return spark.range(0).select(*[
+        F.lit(None).cast(f.dataType).alias(f.name)
+        for f in StructType.fromDDL(schema).fields
+    ])
 
 
 def _frozen_partitions(df: DataFrame, order_cols: list[Column | str],
                        num_partitions: int | None) -> DataFrame:
     """Range-partition + sort by ``order_cols`` and freeze the result with an
     eager localCheckpoint: both passes (per-partition stats collect, then the
-    Arrow assign pass) must see IDENTICAL partitions — a recompute would
+    offset assign pass) must see IDENTICAL partitions — a recompute would
     resample range boundaries.  localCheckpoint (vs persist) also lets the
     ContextCleaner release the blocks when the plan is GC'd; a persist()
     stays registered in the CacheManager forever (block-manager leak when
@@ -36,11 +50,16 @@ def with_global_seq(df: DataFrame, order_cols: list[Column | str],
     """Dense global 0-based rank by ``order_cols`` WITHOUT a
     single-partition window: range-partition on the sort key, freeze the
     partitions, collect per-partition counts, then assign offset + local
-    index in one Arrow pass.
+    index in one JVM projection.
 
     This is the scale-safe replacement for
     ``row_number().over(Window.orderBy(...))`` — the naive form funnels the
     whole superstep through one task.
+
+    The local index is ``monotonically_increasing_id()`` minus its
+    partition part (``__pid << 33``): over the frozen partitions it counts
+    each partition's rows in their sorted order.  No Python worker runs;
+    a worker call costs a fixed share of CPU whatever its row count.
 
     The upstream pipeline is evaluated exactly ONCE (the eager
     localCheckpoint); emptiness falls out of the per-partition counts — a
@@ -50,29 +69,16 @@ def with_global_seq(df: DataFrame, order_cols: list[Column | str],
     sizes = {r["__pid"]: r["count"] for r in d.groupBy("__pid").count().collect()}
     if not sizes:
         return d.drop("__pid").withColumn(out_col, F.lit(start).cast("long"))
-    offsets = {}
+    offsets = []
     acc = start
     for pid in sorted(sizes):
-        offsets[pid] = acc
+        offsets += [F.lit(pid), F.lit(acc).cast("long")]
         acc += sizes[pid]
-    bc = d.sparkSession.sparkContext.broadcast(offsets)
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local = 0
-        off = None
-        for b in batches:
-            if off is None and len(b):
-                off = bc.value[int(b["__pid"].iloc[0])]
-            b = b.copy()
-            b[out_col] = off + local + pd.RangeIndex(len(b))
-            local += len(b)
-            yield b.drop(columns=["__pid"])
-
-    out = d.mapInPandas(assign, f"{fields}, {out_col} long")
-    return out
+    pid = F.col("__pid")
+    local = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    return d.withColumn(
+        out_col, F.create_map(*offsets)[pid] + local
+    ).drop("__pid")
 
 
 def with_global_cumsum(df: DataFrame, order_cols: list[Column | str],

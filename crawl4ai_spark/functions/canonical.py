@@ -79,8 +79,7 @@ def efficient_normalize_url_for_deep_crawl(href: str | None, base_url: str) -> s
     )
 
 
-def _canon_series(hrefs: pd.Series, bases: pd.Series, fast: bool) -> pd.Series:
-    fn = efficient_normalize_url_for_deep_crawl if fast else normalize_url_for_deep_crawl
+def _canon_series(hrefs: pd.Series, bases: pd.Series) -> pd.Series:
     # Per-batch memo: link batches repeat hrefs heavily (nav links), the
     # set-oriented stand-in for the reference's lru_cache.
     memo: dict[tuple[str, str], str | None] = {}
@@ -89,7 +88,7 @@ def _canon_series(hrefs: pd.Series, bases: pd.Series, fast: bool) -> pd.Series:
         key = (href, base)
         got = memo.get(key)
         if got is None and key not in memo:
-            got = fn(href, base if base is not None else "")
+            got = normalize_url_for_deep_crawl(href, base if base is not None else "")
             memo[key] = got
         out.append(got)
     return pd.Series(out, dtype="object")
@@ -98,62 +97,76 @@ def _canon_series(hrefs: pd.Series, bases: pd.Series, fast: bool) -> pd.Series:
 @pandas_udf(StringType())
 def canonicalize_udf(hrefs: pd.Series, bases: pd.Series) -> pd.Series:
     """Arrow-batched ``normalize_url_for_deep_crawl`` (utils.py:2162-2207)."""
-    return _canon_series(hrefs, bases, fast=False)
+    return _canon_series(hrefs, bases)
 
 
-@pandas_udf(StringType())
-def canonicalize_fast_udf(hrefs: pd.Series, bases: pd.Series) -> pd.Series:
-    """Arrow-batched ``efficient_normalize_url_for_deep_crawl`` (utils.py:2209-2235)."""
-    return _canon_series(hrefs, bases, fast=True)
-
-
-@pandas_udf(StringType())
-def join_url_udf(hrefs: pd.Series, bases: pd.Series) -> pd.Series:
-    """Arrow-batched plain ``normalize_url`` (utils.py:2148-2159)."""
-    out = []
-    for href, base in zip(hrefs.tolist(), bases.tolist()):
-        try:
-            out.append(normalize_url(href or "", base or ""))
-        except ValueError:
-            out.append(None)
-    return pd.Series(out, dtype="object")
-
-
-def canonical_col(href: Column, base: Column, fast: bool = False) -> Column:
+def canonical_col(href: Column, base: Column) -> Column:
     """Canonical-URL column; pair with ``url_hash_col`` for the seen key."""
-    return (canonicalize_fast_udf if fast else canonicalize_udf)(href, base)
+    return canonicalize_udf(href, base)
 
 
-@pandas_udf(StructType([
-    StructField("abs", StringType()),
-    StructField("canon", StringType()),
-]))
+def fetch_key_of(url: str | None) -> str | None:
+    """The fetch key the crawl stores with a frontier row pushing ``url``:
+    the URL canonicalized against itself.  The canonicalizer is not
+    idempotent (``a;/`` joined onto ``http://h.com/a/b/`` canonicalizes to
+    ``http://h.com/a/b/a;``, and that to ``http://h.com/a/b/a``), so the
+    key of a canonical URL is not the URL itself."""
+    return normalize_url_for_deep_crawl(url, url or "")
+
+
+def _join(href, base) -> str | None:
+    try:
+        return normalize_url(href or "", base or "")
+    except ValueError:
+        return None
+
+
+def _discovery_udf(*fields: str):
+    """A string-struct pandas UDF for link discovery, marked
+    nondeterministic although it is pure: the optimizer then keeps the
+    validity filters above the one projection that calls it, instead of
+    pushing a copy of the call below that projection (a second Arrow pass
+    over the same rows)."""
+    schema = StructType([StructField(n, StringType()) for n in fields])
+    return lambda f: pandas_udf(schema)(f).asNondeterministic()
+
+
+@_discovery_udf("abs", "key")
+def join_url_udf(hrefs: pd.Series, bases: pd.Series) -> pd.DataFrame:
+    """Arrow-batched plain ``normalize_url`` (utils.py:2148-2159) for
+    best-first discovery, which pushes the absolute href as-is.  ``abs`` is
+    NULL where normalize_url raises (invalid base); ``key`` is the pushed
+    row's fetch key, ``fetch_key_of(abs)``."""
+    abs_out = [_join(h, b) for h, b in zip(hrefs.tolist(), bases.tolist())]
+    return pd.DataFrame({"abs": abs_out, "key": [fetch_key_of(a) for a in abs_out]})
+
+
+@_discovery_udf("abs", "canon", "key")
 def join_and_canonicalize_udf(hrefs: pd.Series, bases: pd.Series) -> pd.DataFrame:
     """One-pass fusion of ``normalize_url`` (utils.py:2148-2159) and
     ``normalize_url_for_deep_crawl`` (utils.py:2162-2207) for the BFS
     discovery hot path: the canonicalizer's first step is the same
     urljoin, so computing both in one Arrow batch halves the Python
-    round trips (and the href/base column transfer) versus chaining
-    ``join_url_udf`` → ``canonicalize_udf``.
+    round trips (and the href/base column transfer) versus chaining a
+    join UDF into ``canonicalize_udf``.
 
     ``abs`` is NULL where normalize_url raises (invalid base); ``canon``
     is byte-identical to ``canonicalize_udf(abs, base)`` — the canonical
     is derived from the computed absolute href (NOT the raw href), so an
     empty raw href still canonicalizes to the base URL exactly as the
-    old two-UDF chain did.
+    old two-UDF chain did.  ``key`` is the pushed row's fetch key,
+    ``fetch_key_of(canon)``.
     """
     abs_out: list = []
     canon_out: list = []
     for href, base in zip(hrefs.tolist(), bases.tolist()):
-        try:
-            a = normalize_url(href or "", base or "")
-        except ValueError:
-            a = None
+        a = _join(href, base)
         abs_out.append(a)
         canon_out.append(
             normalize_url_for_deep_crawl(a, base or "") if a is not None else None
         )
-    return pd.DataFrame({"abs": abs_out, "canon": canon_out})
+    return pd.DataFrame({"abs": abs_out, "canon": canon_out,
+                         "key": [fetch_key_of(c) for c in canon_out]})
 
 
 def url_hash_col(url: Column) -> Column:

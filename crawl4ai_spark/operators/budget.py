@@ -28,8 +28,8 @@ host from observed yield.  Two operators:
 Scale shape: the weights frame is host-dimension sized, but a naive
 ``row_number().over(Window.orderBy(remainder))`` would still funnel
 10^8 hosts through one task — the extra-unit rank instead uses
-``dist.with_global_seq`` (range-partition + broadcast per-partition
-offsets), the same scale-safe global order used by
+``dist.with_global_seq`` (range-partition + per-partition offsets
+assigned in the JVM), the same scale-safe global order used by
 ``sampling.mixture_sample``.  The two scalar reads (weight total,
 leftover) are one-row control aggregates.
 """

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..dist import empty_frame
+
 DEFAULT_BASE_DELAY = (1.0, 3.0)  # async_dispatcher.py:33
 MAX_DELAY = 60.0  # :34
 MAX_RETRIES = 3  # :35
@@ -254,7 +256,7 @@ def empty_domain_state() -> pd.DataFrame:
 
 
 def empty_domain_state_df(spark) -> DataFrame:
-    return spark.createDataFrame([], DOMAIN_STATE_SCHEMA)
+    return empty_frame(spark, DOMAIN_STATE_SCHEMA)
 
 
 def fold_domain_state_df(state_df: DataFrame, results: DataFrame,

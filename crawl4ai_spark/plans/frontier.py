@@ -26,11 +26,19 @@ and strict DFS drain their frontier, as the reference loops do.
 Link discovery (bfs_strategy.py:68-139 / bff_strategy.py:76-125) is the
 same dataflow both ways:
 
-  explode links → canonicalize (Arrow UDF; BFS family only — best-first
-  operates on RAW hrefs, a faithful reference quirk) → validity + filter
-  chain (Catalyst conjunction on the raw href) → score (Catalyst) →
+  explode links → join + canonicalize (one Arrow UDF pass; best-first
+  pushes the RAW absolute href, a faithful reference quirk) → validity +
+  filter chain (Catalyst conjunction on the raw href) → score (Catalyst) →
   anti-join seen → per-parent capacity truncation (windows reproducing the
   reference's conditional sort-then-truncate) → dense global sequence.
+
+That UDF pass is the crawl's only Python stage.  It also returns each
+pushed row's fetch key, ``fetch_key_of(url)``, which the frontier row
+carries (seeds are keyed on the driver), so the pop derives the fetch host
+in the JVM.  Frames the driver builds are JVM-local (a pandas seed frame,
+typed empty projections), never a PythonRDD, and ``with_global_seq``
+assigns its offsets in the JVM: each Python worker invocation costs a
+fixed share of CPU whatever its row count (see ``_ROWS_PER_TASK``).
 
 Scale notes (the 100 TB design):
   - every per-level global ordering uses ``with_global_seq`` (range
@@ -58,13 +66,15 @@ from dataclasses import dataclass, field
 from math import inf
 from typing import Any
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..dist import with_global_cumsum, with_global_seq
+from ..dist import empty_frame, with_global_cumsum, with_global_seq
 from ..functions.canonical import (
     canonical_col,
+    fetch_key_of,
     join_and_canonicalize_udf,
     join_url_udf,
 )
@@ -85,8 +95,10 @@ from .checkpoint import SnapshotStore
 
 _BIG = 1 << 62  # stands in for math.inf page budgets in long arithmetic
 
-# Target rows per task for superstep dataflows.  Python-stage jobs cost
-# ~0.3 s per partition per job in local mode (worker round-trips), so tiny
+# Target rows per task for superstep dataflows.  Each Python worker
+# invocation (one partition of one Python stage in one job) costs ~0.22
+# worker CPU-s at any row count, mostly PySpark's per-task
+# ``importlib.invalidate_caches()`` re-reading ``pyspark.zip``, so tiny
 # supersteps must not inherit the full shuffle parallelism; at scale the
 # same rule sizes partitions to the pop batch instead of a global constant.
 _ROWS_PER_TASK = 20_000
@@ -211,15 +223,18 @@ RESULT_COLS = [
     "score", "success", "status_code", "attempt", "image_id",
 ]
 
-# Frontier row, one schema for every strategy: ``seq`` is the queue key, a
-# global enqueue id stable across budget deferral and retries (BFS: seeds
-# first, then discovery order, and also the emitted result ``seq``; heap:
-# the push id; stack: higher pops first).  ``attempt`` counts backoff
-# retries; ``ready`` is the earliest superstep the row may fetch in.
-FRONTIER_COLS = ["url", "parent", "depth", "seq", "score", "attempt", "ready"]
+# Frontier row, one schema for every strategy: ``fetch_key`` is the
+# canonical fetch key, ``fetch_key_of(url)``, stored when the row is pushed
+# so no Python pass runs at pop.  ``seq`` is the queue key, a global enqueue
+# id stable across budget deferral and retries (BFS: seeds first, then
+# discovery order, and also the emitted result ``seq``; heap: the push id;
+# stack: higher pops first).  ``attempt`` counts backoff retries; ``ready``
+# is the earliest superstep the row may fetch in.
+FRONTIER_COLS = ["url", "fetch_key", "parent", "depth", "seq", "score",
+                 "attempt", "ready"]
 FRONTIER_SCHEMA = (
-    "url string, parent string, depth int, seq long, score double, "
-    "attempt int, ready long"
+    "url string, fetch_key string, parent string, depth int, seq long, "
+    "score double, attempt int, ready long"
 )
 
 
@@ -280,17 +295,15 @@ class CrawlEngine:
 
     def _prepare(self, frontier: DataFrame, n_rows: int,
                  hot_hosts: list[str]) -> DataFrame:
-        """Canonical fetch key + host, partitioned for the fetch stage."""
-        f = frontier.withColumn(
-            "fetch_key", canonical_col(F.col("url"), F.col("url"))
-        ).withColumn("host", F.lower(host_of(F.col("fetch_key"))))
-        # Hash-partition on host, sized to the batch: (a) breaks the
-        # canonicalize→robots chained-Python-stage fusion (each chained
-        # python stage pays per-partition worker round-trips per job);
-        # (b) co-partitions for the robots memo and the politeness window
-        # (Window.partitionBy(host) reuses this exchange — no extra
-        # shuffle); (c) hot hosts fan out over salted sub-keys so one
-        # domain can never pin a whole task (D7).
+        """Host of the stored fetch key (Catalyst), partitioned for the
+        fetch stage."""
+        f = frontier.withColumn("host", F.lower(host_of(F.col("fetch_key"))))
+        # Hash-partition on host, sized to the batch: (a) sizes the robots
+        # gate's Arrow stage to the batch (each of its partitions is one
+        # Python worker invocation per job); (b) co-partitions for the
+        # robots memo and the politeness window (Window.partitionBy(host)
+        # reuses this exchange — no extra shuffle); (c) hot hosts fan out
+        # over salted sub-keys so one domain can never pin a whole task (D7).
         if hot_hosts:
             f = salt_hot_hosts(f, hot_hosts, self.cfg.salt_buckets,
                                url_col="url")
@@ -373,7 +386,8 @@ class CrawlEngine:
             ).cast("long"),
         )
         return j.select(
-            "url", "parent", "depth", F.col(key).alias("seq"), "score",
+            "url", "fetch_key", "parent", "depth", F.col(key).alias("seq"),
+            "score",
             (F.col("attempt") + 1).alias("attempt"),
             (F.lit(superstep) + steps).alias("ready"),
         )
@@ -420,23 +434,22 @@ class CrawlEngine:
         # (content_scraping_strategy.py:488-492), so link["href"] reaching
         # link_discovery is always urljoin(page_url, raw).strip(); our
         # synthetic links table stores raw variants to exercise this stage.
+        # One Arrow pass also returns the pushed row's fetch key,
+        # fetch_key_of(target), so the pop needs no Python pass.
         if canonicalize:
             # BFS family: C2 canonical is the pushed URL + seen key (:105).
             # C1 + C2 fused into ONE Arrow stage (join_and_canonicalize_udf)
             # — one Python round trip instead of two chained pandas UDFs.
-            cand = cand.withColumn(
-                "__jc", join_and_canonicalize_udf(F.col("href"), F.col("parent_url"))
-            ).withColumn(
-                "abs_href", F.col("__jc.abs")
-            ).withColumn(
-                "target", F.col("__jc.canon")
-            ).drop("__jc").filter(F.col("abs_href").isNotNull())
+            jc = join_and_canonicalize_udf(F.col("href"), F.col("parent_url"))
+            target = F.col("__jc.canon")
         else:
             # best-first pushes the scraper's absolute href as-is (bff :108)
-            cand = cand.withColumn(
-                "abs_href", join_url_udf(F.col("href"), F.col("parent_url"))
-            ).filter(F.col("abs_href").isNotNull())
-            cand = cand.withColumn("target", F.col("abs_href"))
+            jc = join_url_udf(F.col("href"), F.col("parent_url"))
+            target = F.col("__jc.abs")
+        cand = cand.withColumn("__jc", jc).select(
+            "*", F.col("__jc.abs").alias("abs_href"), target.alias("target"),
+            F.col("__jc.key").alias("push_key"),
+        ).drop("__jc").filter(F.col("abs_href").isNotNull())
         # P1 validity + P2 filter chain — on the absolute href (bfs :109)
         if cfg.collect_filter_stats:
             passed_expr = url_validity(F.col("abs_href"))
@@ -494,6 +507,7 @@ class CrawlEngine:
         cand = cand.withColumn("rn", rn).filter(F.col("rn") <= F.col("remaining"))
         out = cand.select(
             F.col("target").alias("url"),
+            F.col("push_key").alias("fetch_key"),
             F.col("parent_url").alias("parent"),
             F.col("link_depth").alias("depth"),
             F.col("score"),
@@ -520,6 +534,11 @@ class CrawlEngine:
         s = mf["superstep"]
         self.store.clean_orphans(s)
         frontier = self.store.read_one(self.spark, "frontier", s)
+        if "fetch_key" not in frontier.columns:
+            # snapshot written before the key was stored: key it once here
+            frontier = frontier.withColumn(
+                "fetch_key", canonical_col(F.col("url"), F.col("url"))
+            ).localCheckpoint(eager=True)
         seen = self.store.read_one(self.spark, "seen", s)
         parts = []
         start = 0
@@ -573,11 +592,18 @@ class CrawlEngine:
         """Superstep-0 state: the seeds at depth 0 with queue keys in seed
         order (a stack gets them reversed, so the first seed pops first)."""
         n = len(seeds)
-        frontier = self.spark.createDataFrame(
-            [(u, None, 0, n - 1 - i if pop.kind == "stack" else i, 0.0, 0, 0)
-             for i, u in enumerate(seeds)],
-            FRONTIER_SCHEMA,
-        )
+        if n:
+            # from pandas, the frame is a JVM LocalTableScan; a Python list
+            # would be a PythonRDD that Python workers re-serialize in
+            # every job reading it
+            seq = range(n - 1, -1, -1) if pop.kind == "stack" else range(n)
+            frontier = self.spark.createDataFrame(pd.DataFrame({
+                "url": seeds, "fetch_key": [fetch_key_of(u) for u in seeds],
+                "parent": [None] * n, "depth": 0, "seq": list(seq),
+                "score": 0.0, "attempt": 0, "ready": 0,
+            }), FRONTIER_SCHEMA)
+        else:
+            frontier = empty_frame(self.spark, FRONTIER_SCHEMA)
         if pop.kind == "stack" and self.cfg.scorer is not None:
             # DFS results carry each page's own score (dfs_strategy.py:
             # 40-45); discovered rows are scored on push, seeds here
@@ -586,7 +612,7 @@ class CrawlEngine:
         return {
             "superstep": 0,
             "frontier": frontier,
-            "seen": self.spark.createDataFrame([], "url string"),
+            "seen": empty_frame(self.spark, "url string"),
             "result_parts": [],
             "counters": {"pages_crawled": 0, "enq_base": n, "result_base": 0},
             "domain_state": empty_domain_state_df(self.spark),
@@ -899,10 +925,11 @@ class CrawlEngine:
             for p in parts[1:]:
                 results = results.unionByName(p)
         else:
-            results = self.spark.createDataFrame(
-                [], "superstep int, seq long, url string, fetch_key string, host string, "
-                    "depth int, parent string, score double, success boolean, "
-                    "status_code int, attempt int, image_id string",
+            results = empty_frame(
+                self.spark,
+                "superstep int, seq long, url string, fetch_key string, host string, "
+                "depth int, parent string, score double, success boolean, "
+                "status_code int, attempt int, image_id string",
             )
         if self.cfg.fetch_ssl_certificate:
             from ..operators.sslcert import ssl_certificate_stage

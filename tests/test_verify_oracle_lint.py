@@ -1,8 +1,9 @@
-"""The local gate's oracle type lint (tools/verify_oracle.py)."""
+"""The local gate's oracle type lint and pandas-path hash
+(tools/verify_oracle.py)."""
 
 import duckdb
 
-from tools.verify_oracle import wide_int_columns
+from tools.verify_oracle import frame_hash, pandas_rows, wide_int_columns
 
 
 def _duck_types(sql: str) -> dict[str, str]:
@@ -27,3 +28,16 @@ def test_fixed_oracles_are_clean():
         "FROM (SELECT 1 AS x) GROUP BY x")
     spark = {"n_kept": "bigint", "send_at_s": "double"}
     assert wide_int_columns(spark, duck) == []
+
+
+def test_pandas_fetch_tells_hugeint_sum_from_spark_bigint(spark):
+    # the correctness gate hashes pandas fetches: DuckDB's HUGEINT sum
+    # arrives as float64 2.0, Spark's bigint as 2, so the hashes must differ
+    spark_side = frame_hash(*pandas_rows(
+        spark.sql("SELECT CAST(2 AS BIGINT) AS s").toPandas()))
+    con = duckdb.connect()
+    uncast = con.sql("SELECT sum(x) AS s FROM (SELECT 2 AS x)")
+    assert frame_hash(*pandas_rows(uncast.df())) != spark_side
+    assert frame_hash(uncast.columns, uncast.fetchall()) == spark_side
+    cast = con.sql("SELECT CAST(sum(x) AS BIGINT) AS s FROM (SELECT 2 AS x)")
+    assert frame_hash(*pandas_rows(cast.df())) == spark_side

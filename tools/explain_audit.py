@@ -962,8 +962,8 @@ def main() -> None:
                         ag_plan, sections[-1][2])
 
     # 60. Budget apportionment: largest-remainder extras ranked by the
-    # scale-safe global seq (range partition + Arrow offsets) — NO
-    # single-partition Window over the host dimension
+    # scale-safe global seq (range partition + JVM offsets) — NO
+    # single-partition Window over the host dimension and no Python pass
     from crawl4ai_spark.operators.budget import apportion_budget
 
     aud_w = spark.range(0, 20000).select(
@@ -973,13 +973,15 @@ def main() -> None:
     ap_plan = plan_of(apportion_budget(aud_w, 1_000_000))
     sections.append((
         "Budget apportionment (decimal-exact shares + global-seq extras, "
-        "no single-partition window)",
+        "no single-partition window, no Python operator)",
         # the range shuffle sits upstream of with_global_seq's eager
         # localCheckpoint, so this plan starts at the frozen RDD scan
-        ap_plan, ["MapInPandas", "Scan ExistingRDD"],
+        ap_plan, ["Scan ExistingRDD"],
     ))
-    if "Window" in ap_plan:
-        sections[-1] = (sections[-1][0] + " — FAIL: window crept in",
+    bad = [op for op in ("Window", "ArrowEvalPython", "BatchEvalPython",
+                         "InPandas", "InArrow") if op in ap_plan]
+    if bad:
+        sections[-1] = (sections[-1][0] + f" — FAIL: {', '.join(bad)} in plan",
                         ap_plan, sections[-1][2])
 
     out = ["# PLANS — physical-plan audit (`.explain(\"formatted\")`)\n"]

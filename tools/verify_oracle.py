@@ -5,12 +5,16 @@ exists, the same query in DuckDB over the identical parquet tables; compares
 row count, column-name set, and an order-insensitive value hash (columns
 sorted by name, rows sorted, values stringified with float canonicalization).
 
+Both sides are fetched through pandas (Spark ``toPandas()``, DuckDB
+``.df()``) before hashing, as the correctness gate does, so pandas' dtype
+coercions show here too: DuckDB types an un-CAST ``sum()`` of integers
+HUGEINT, which a pandas fetch renders as ``2.0`` where Spark's bigint
+renders ``2``.
+
 It also lints each oracle's column types: a HUGEINT, UHUGEINT or DECIMAL
-oracle column whose Spark twin is integral fails the probe.  DuckDB types
-an un-CAST ``sum()`` of integers HUGEINT, and a pandas fetch renders such
-values as ``2.0`` where Spark renders ``2``, so the hashes can agree here
-and still disagree in a pandas-based comparison.  CAST those columns to
-BIGINT in the oracle SQL.
+oracle column whose Spark twin is integral fails the probe even where the
+rendered values happen to agree.  CAST those columns to BIGINT in the
+oracle SQL.
 
 Usage: python tools/verify_oracle.py [sf_dir] [query ...]
 """
@@ -25,6 +29,7 @@ import time
 sys.path.insert(0, ".")
 
 import duckdb
+import pandas as pd
 
 _INTEGRAL_SPARK = {"tinyint", "smallint", "int", "bigint"}
 _WIDE_DUCK = ("HUGEINT", "UHUGEINT", "DECIMAL")
@@ -49,15 +54,25 @@ TABLES = [
 
 
 def _canon_value(v):
-    if v is None:
+    # a pandas fetch holds a NULL as None, NaN, NaT or NA by dtype and
+    # engine (DuckDB's nullable BOOLEAN: NaN; Spark's: None), and a float
+    # NaN can no longer be told from NULL after it
+    if v is None or v is pd.NaT or v is pd.NA or (
+            isinstance(v, float) and math.isnan(v)):
         return "NULL"
     if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
         return repr(v)
     if isinstance(v, bool):
         return "true" if v else "false"
     return str(v)
+
+
+def pandas_rows(pdf: pd.DataFrame) -> tuple[list[str], list[tuple]]:
+    """Column names and rows of a pandas fetch, as Python values (numpy
+    scalars unboxed)."""
+    cols = [str(c) for c in pdf.columns]
+    data = [pdf.iloc[:, i].tolist() for i in range(len(cols))]
+    return cols, list(zip(*data))
 
 
 def frame_hash(cols: list[str], rows: list[tuple]) -> str:
@@ -101,9 +116,8 @@ def main() -> int:
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
-            scols = sdf.columns
             stypes = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-            srows = [tuple(r) for r in sdf.collect()]
+            scols, srows = pandas_rows(sdf.toPandas())
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)
@@ -116,9 +130,8 @@ def main() -> int:
             continue
         try:
             rel = con.sql(oracles[name])
-            ocols = rel.columns
-            otypes = dict(zip(ocols, (str(t) for t in rel.types)))
-            orows = rel.fetchall()
+            otypes = dict(zip(rel.columns, (str(t) for t in rel.types)))
+            ocols, orows = pandas_rows(rel.df())
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: duckdb error: {e}")
             failures.append(name)
