@@ -4,8 +4,7 @@ Reference: content_scraping_strategy.py:268-414 ``process_image`` —
 score = [w>150] + [h>150] + [alt≠''] + [index/total<0.5] +
 [any source has an image-format substring] + [srcset present] +
 [inside <picture>]; images with score ≤ image_score_threshold
-(default 2, config.py:86) are rejected; context rejects
-(display:none / button / icon / logo, :310-318).
+(default 2, config.py:86) are rejected.
 
 The score is pure Catalyst arithmetic (whole-stage codegen on 100 TB);
 decode + pixel invariants run as one Arrow ``mapInPandas`` pass over the
@@ -17,7 +16,6 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -27,23 +25,6 @@ from ..sources.synth import image_pixels
 
 IMAGE_SCORE_THRESHOLD = 2  # config.py:86
 IMAGE_FORMATS = ("jpg", "jpeg", "png", "webp", "avif", "gif")
-_CLASSES_TO_CHECK = ("button", "icon", "logo")
-_TAGS_TO_CHECK = ("button", "input")
-
-
-def image_context_reject(style: Column, parent_tag: Column, parent_classes: Column,
-                         src: Column, alt: Column) -> Column:
-    """:310-318 quick-validation rejects (display:none, button/input parent,
-    button/icon/logo in parent classes / src / alt)."""
-    cond = F.coalesce(style, F.lit("")).contains("display:none")
-    cond = cond | F.coalesce(parent_tag, F.lit("")).isin(list(_TAGS_TO_CHECK))
-    for c in _CLASSES_TO_CHECK:
-        cond = cond | F.exists(
-            F.coalesce(parent_classes, F.array()), lambda cls: cls.contains(c)
-        )
-        cond = cond | F.coalesce(src, F.lit("")).contains(c)
-        cond = cond | F.coalesce(alt, F.lit("")).contains(c)
-    return cond
 
 
 def image_score(w: Column, h: Column, alt: Column, index: Column, total: Column,

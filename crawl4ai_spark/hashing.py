@@ -12,8 +12,6 @@ column function in tests/test_hashing.py.
 
 from __future__ import annotations
 
-import numpy as np
-
 _MASK64 = 0xFFFFFFFFFFFFFFFF
 _PRIME1 = 0x9E3779B185EBCA87
 _PRIME2 = 0xC2B2AE3D27D4EB4F
@@ -92,20 +90,3 @@ def xxh64_signed(data: bytes | str, seed: int = SPARK_XXHASH_SEED) -> int:
     h = xxh64(data, seed)
     return h - (1 << 64) if h >= (1 << 63) else h
 
-
-def xxh64_str(s: str, seed: int = SPARK_XXHASH_SEED) -> int:
-    """Unsigned XXH64 of a UTF-8 string (bloom/salting key material)."""
-    return xxh64(s.encode("utf-8"), seed)
-
-
-def xxh64_np(strings: "np.ndarray | list[str]", seed: int = SPARK_XXHASH_SEED) -> np.ndarray:
-    """Vectorized-ish signed xxh64 over an array of strings (pandas-UDF path).
-
-    Python-loop per element but called only inside Arrow batches where the
-    per-batch overhead is amortized; the hot Spark path uses the JVM-side
-    ``F.xxhash64`` column instead.
-    """
-    out = np.empty(len(strings), dtype=np.int64)
-    for i, s in enumerate(strings):
-        out[i] = xxh64_signed(s if s is not None else "", seed)
-    return out

@@ -11,8 +11,7 @@ carrying the node metrics the walk would compute:
 
 which is exactly what a scrape pass emits per top-level block.  All
 arithmetic stays in whole-stage codegen; the fixed-threshold decision is
-one filter.  The dynamic-threshold variant (:699-712) adjusts the cutoff
-per row from tag importance / text ratio / link ratio — also pure columns.
+one filter.
 """
 
 from __future__ import annotations
@@ -25,11 +24,6 @@ TAG_WEIGHTS = {
     "div": 0.5, "p": 1.0, "article": 1.5, "section": 1.0, "span": 0.3,
     "li": 0.5, "ul": 0.5, "ol": 0.5, "h1": 1.2, "h2": 1.1, "h3": 1.0,
     "h4": 0.9, "h5": 0.8, "h6": 0.7,
-}
-# :571-582
-TAG_IMPORTANCE = {
-    "article": 1.5, "main": 1.4, "section": 1.3, "p": 1.2, "h1": 1.4,
-    "h2": 1.3, "h3": 1.2, "div": 0.7, "span": 0.6,
 }
 # :114-116 (re.I); reference uses .match → anchored at start
 NEGATIVE_PATTERN = r"(?i)^(?:nav|footer|header|sidebar|ads|comment|promo|advert|social|share)"
@@ -81,26 +75,6 @@ def pruning_score(tag_name: Column, text_len: Column, tag_len: Column,
         wc = F.length(text) - F.length(F.regexp_replace(text, " ", "")) + 1
         return F.when(wc < min_word_threshold, F.lit(-1.0)).otherwise(score)
     return score
-
-
-def dynamic_threshold(tag_name: Column, text_len: Column, tag_len: Column,
-                      link_text_len: Column,
-                      base_threshold: float = DEFAULT_THRESHOLD) -> Column:
-    """:699-712 — per-row adjusted cutoff."""
-    imp = F.coalesce(
-        F.create_map(*[F.lit(v) for kv in TAG_IMPORTANCE.items() for v in kv])[tag_name],
-        F.lit(0.7),
-    )
-    tl = text_len.cast("double")
-    gl = tag_len.cast("double")
-    ll = link_text_len.cast("double")
-    text_ratio = F.when(gl > 0, tl / gl).otherwise(F.lit(0.0))
-    link_ratio = F.when(tl > 0, ll / tl).otherwise(F.lit(1.0))
-    t = F.lit(base_threshold)
-    t = t * F.when(imp > 1.0, 0.8).otherwise(1.0)
-    t = t * F.when(text_ratio > 0.4, 0.9).otherwise(1.0)
-    t = t * F.when(link_ratio > 0.6, 1.2).otherwise(1.0)
-    return t
 
 
 def prune_keep(score: Column, threshold: float = DEFAULT_THRESHOLD) -> Column:

@@ -108,8 +108,7 @@ def domain_authority_score_df(frontier: DataFrame, weights: DataFrame,
     (`deep_crawling/scorers.py:414-519`, reproduced by
     ``functions.scorers.domain_authority_score`` as a broadcast
     ``create_map`` — fine for dozens of domains, not for the millions of
-    hosts a computed ranking covers).  Same dict/DataFrame dual-path
-    pattern as the robots gate (``robots_gate`` / ``robots_gate_df``).
+    hosts a computed ranking covers).
 
     Semantics match the dict scorer exactly: domain extraction strips the
     port, weight keys are lowercased, misses fall back to

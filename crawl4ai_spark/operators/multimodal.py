@@ -120,20 +120,6 @@ def dct_phash_stage(images: DataFrame) -> DataFrame:
     )
 
 
-def frame_sample_stage(videos: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame sampling plumbing. STUB: no ffmpeg in this sandbox — a
-    real deployment demuxes and decodes here. The schema and batch shape
-    are the real contract: (video_id, frame_idx, bytes, w, h, fmt)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raise NotImplementedError("video decode requires ffmpeg; plumbing only")
-        yield  # pragma: no cover
-
-    return videos.mapInPandas(
-        run, "video_id string, frame_idx int, bytes binary, w int, h int, fmt string"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Container format sniffing (magic bytes vs declared metadata)
 # ---------------------------------------------------------------------------

@@ -7,17 +7,19 @@ async_webcrawler.py:361-370 gate):
   - ANY failure path allows: missing host row, fetch error (status != 200),
     empty rules, unparseable rules;
   - stale cache (> 7-day TTL, utils.py:216-217) triggers refetch — in the
-    synthetic world a refetch returns the same current rules, so staleness
-    only matters when the refetch would fail (status != 200 → allow);
+    synthetic world a refetch returns the same current rules, so only the
+    fetch status decides which rules apply, never the fetch time;
   - a disallowed URL becomes CrawlResult(success=False, status_code=403,
     error="Access denied by robots.txt") and is NOT fetched
     (async_webcrawler.py:361-370).
 
-Execution shape: rules tables are per-host (small dimension, thousands of
-hosts per crawl) → evaluated inside one Arrow ``mapInPandas`` pass with the
-parsed RobotFileParser objects memoized per host within each batch. At
-100 TB the frontier arrives partitioned by host (politeness already groups
-it), so each batch touches few distinct hosts and the memo hit-rate is ≈1.
+Execution shape: one gate, ``robots_gate_df``.  The per-host rules table
+(``RULES_SCHEMA``) is a DataFrame broadcast-joined onto the frontier on
+host; the engine turns a pandas rules table into one once
+(``CrawlEngine.__init__``).  One Arrow ``mapInPandas`` pass evaluates the
+rules with the parsed RobotFileParser objects memoized per host.  At 100 TB
+the frontier arrives partitioned by host (politeness already groups it), so
+each batch touches few distinct hosts and the memo hit-rate is ≈1.
 """
 
 from __future__ import annotations
@@ -29,89 +31,30 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-ROBOTS_TTL = 7 * 24 * 60 * 60  # utils.py:216-217
+# the per-host rules table; an explicit schema keeps a pandas table a JVM
+# LocalTableScan even when a column is all null
+RULES_SCHEMA = "host string, rules string, fetch_time long, status int"
 
 
-def effective_rules(rules: str | None, fetch_time: int, status: int,
-                    now: int, ttl: int = ROBOTS_TTL) -> str | None:
-    """Collapse the cache/refetch state machine to the rules text that
-    applies *now*; None ⇒ allow-all."""
+def effective_rules(rules: str | None, status: int) -> str | None:
+    """The rules text that applies; None ⇒ allow-all.  Only a 200 robots
+    fetch yields rules (utils.py:304-315)."""
     if status != 200 or rules is None:
         return None
-    # fresh or successfully refetchable → same content either way
     return rules
 
 
-def allowed_for(urls: list[str], rules: str | None, user_agent: str = "*") -> list[bool]:
-    """RobotsParser.can_fetch tail (utils.py:318-328): parse once, evaluate
-    each URL; unparseable/empty → allow."""
+def _parser(rules: str | None) -> RobotFileParser | None:
+    """Parsed rules, or None when they allow everything: empty, unparseable
+    or without a single rule line."""
     if not rules:
-        return [True] * len(urls)
-    parser = RobotFileParser()
+        return None
+    rp = RobotFileParser()
     try:
-        parser.parse(rules.splitlines())
+        rp.parse(rules.splitlines())
     except Exception:
-        return [True] * len(urls)
-    if not parser.mtime():
-        return [True] * len(urls)
-    out = []
-    for u in urls:
-        try:
-            out.append(parser.can_fetch(user_agent, u))
-        except Exception:
-            out.append(True)
-    return out
-
-
-def robots_gate(df: DataFrame, robots_pdf: pd.DataFrame | None,
-                url_col: str = "fetch_key", host_col: str = "host",
-                now: int = 1_700_000_000, user_agent: str = "*") -> DataFrame:
-    """Add boolean ``robots_allowed`` to ``df``.
-
-    ``robots_pdf`` is the per-host rules table (host, rules, fetch_time,
-    status); None ⇒ gate disabled (check_robots_txt defaults False,
-    async_configs.py:713) and every row is allowed.
-    """
-    if robots_pdf is None:
-        return df.withColumn("robots_allowed", F.lit(True))
-    rules_by_host: dict[str, str | None] = {}
-    for r in robots_pdf.itertuples():
-        rules_by_host[r.host] = effective_rules(
-            r.rules, int(r.fetch_time), int(r.status), now
-        )
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(rules_by_host)
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema = f"{fields}, robots_allowed boolean"
-
-    def gate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rules_map = bc.value
-        parsers: dict[str, RobotFileParser | None] = {}
-        for b in batches:
-            allowed = pd.Series(True, index=b.index)
-            for host, idx in b.groupby(host_col, sort=False).groups.items():
-                rules = rules_map.get(host)
-                if not rules:
-                    continue
-                if host not in parsers:
-                    rp = RobotFileParser()
-                    try:
-                        rp.parse(rules.splitlines())
-                        parsers[host] = rp if rp.mtime() else None
-                    except Exception:
-                        parsers[host] = None
-                rp = parsers[host]
-                if rp is None:
-                    continue
-                urls = b.loc[idx, url_col]
-                allowed.loc[idx] = [
-                    _safe_can_fetch(rp, user_agent, u) for u in urls.tolist()
-                ]
-            b = b.copy()
-            b["robots_allowed"] = allowed
-            yield b
-
-    return df.mapInPandas(gate, out_schema)
+        return None
+    return rp if rp.mtime() else None
 
 
 def _safe_can_fetch(rp: RobotFileParser, agent: str, url: str) -> bool:
@@ -121,34 +64,34 @@ def _safe_can_fetch(rp: RobotFileParser, agent: str, url: str) -> bool:
         return True
 
 
+def allowed_for(urls: list[str], rules: str | None, user_agent: str = "*") -> list[bool]:
+    """RobotsParser.can_fetch tail (utils.py:318-328): parse once, evaluate
+    each URL; unparseable/empty → allow."""
+    rp = _parser(rules)
+    if rp is None:
+        return [True] * len(urls)
+    return [_safe_can_fetch(rp, user_agent, u) for u in urls]
+
+
 def robots_gate_df(df: DataFrame, rules_df: DataFrame | None,
                    url_col: str = "fetch_key", host_col: str = "host",
-                   now: int = 1_700_000_000, user_agent: str = "*",
-                   broadcast_rules: bool = True) -> DataFrame:
-    """Scale-path robots gate: the rules table is a DataFrame joined on
-    host, never materialized on the driver.
+                   user_agent: str = "*") -> DataFrame:
+    """Add boolean ``robots_allowed`` to ``df``.
 
-    ``robots_gate`` broadcasts a driver dict — fine at thousands of hosts,
-    a driver OOM at millions.  Here the (host, rules, fetch_time, status)
-    table left-joins the frontier (broadcast hash join while the rules
-    table is small; set ``broadcast_rules=False`` to shuffle-join on host,
-    which co-locates with the engine's repartition-by-host exchange), and
-    one Arrow pass parses each batch's rules with a per-host memo — the
-    frontier arrives host-partitioned, so each task touches few distinct
-    hosts and the memo hit-rate is ≈1.  Same allow-on-error truth table as
-    ``robots_gate`` (verified side-by-side in tests)."""
+    ``rules_df`` is the per-host rules table (``RULES_SCHEMA``), never
+    materialized on the driver; None ⇒ gate disabled (check_robots_txt
+    defaults False, async_configs.py:713) and every row is allowed.  The
+    table is broadcast and left-joined on host, and one Arrow pass parses
+    each batch's rules with a per-host memo — the frontier arrives
+    host-partitioned, so each task touches few distinct hosts."""
     if rules_df is None:
         return df.withColumn("robots_allowed", F.lit(True))
     # one row per host, or the left join would duplicate frontier rows
-    # (the dict-based robots_gate can't — its dict keys are unique)
-    r = rules_df.select(
+    r = F.broadcast(rules_df.select(
         F.col("host").alias("__r_host"),
         F.col("rules").alias("__r_rules"),
-        F.col("fetch_time").alias("__r_ftime"),
         F.col("status").alias("__r_status"),
-    ).dropDuplicates(["__r_host"])
-    if broadcast_rules:
-        r = F.broadcast(r)
+    ).dropDuplicates(["__r_host"]))
     j = df.join(r, df[host_col] == r["__r_host"], "left").drop("__r_host")
     fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
@@ -159,32 +102,21 @@ def robots_gate_df(df: DataFrame, rules_df: DataFrame | None,
         for b in batches:
             allowed = pd.Series(True, index=b.index)
             for host, idx in b.groupby(host_col, sort=False).groups.items():
-                sub = b.loc[idx]
-                raw = sub["__r_rules"].iloc[0]
-                status = sub["__r_status"].iloc[0]
-                rules = effective_rules(
-                    None if pd.isna(raw) else raw,
-                    0 if pd.isna(sub["__r_ftime"].iloc[0]) else int(sub["__r_ftime"].iloc[0]),
-                    599 if pd.isna(status) else int(status),
-                    now,
-                )
-                if not rules:
-                    continue
                 if host not in parsers:
-                    rp = RobotFileParser()
-                    try:
-                        rp.parse(rules.splitlines())
-                        parsers[host] = rp if rp.mtime() else None
-                    except Exception:
-                        parsers[host] = None
+                    raw = b.at[idx[0], "__r_rules"]
+                    status = b.at[idx[0], "__r_status"]
+                    parsers[host] = _parser(effective_rules(
+                        None if pd.isna(raw) else raw,
+                        599 if pd.isna(status) else int(status),
+                    ))
                 rp = parsers[host]
                 if rp is None:
                     continue
                 allowed.loc[idx] = [
                     _safe_can_fetch(rp, user_agent, u)
-                    for u in sub[url_col].tolist()
+                    for u in b.loc[idx, url_col].tolist()
                 ]
-            out = b.drop(columns=["__r_rules", "__r_ftime", "__r_status"]).copy()
+            out = b.drop(columns=["__r_rules", "__r_status"])
             out["robots_allowed"] = allowed
             yield out
 
@@ -234,18 +166,16 @@ def crawl_delay_stage(rules_df: DataFrame, user_agent: str = "*",
             delays: list[float | None] = []
             for rules in b[rules_col].tolist():
                 d: float | None = None
-                if rules:
-                    rp = RobotFileParser()
+                rp = _parser(rules)
+                if rp is not None:
                     try:
-                        rp.parse(rules.splitlines())
-                        if rp.mtime():
-                            cd = rp.crawl_delay(user_agent)
-                            rr = rp.request_rate(user_agent)
-                            if cd is not None:
-                                d = float(cd)
-                            if rr is not None and rr.requests:
-                                per = rr.seconds / rr.requests
-                                d = per if d is None else max(d, per)
+                        cd = rp.crawl_delay(user_agent)
+                        rr = rp.request_rate(user_agent)
+                        if cd is not None:
+                            d = float(cd)
+                        if rr is not None and rr.requests:
+                            per = rr.seconds / rr.requests
+                            d = per if d is None else max(d, per)
                     except Exception:
                         d = None
                 delays.append(d)

@@ -91,12 +91,6 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(F.lower(F.trim(F.regexp_replace(text, r"\s+", " "))))
 
 
-def fingerprint_xxh(text: Column) -> Column:
-    """64-bit rolling-style fingerprint (xxhash64) — the engine-internal
-    key (same family as the URL-seen key)."""
-    return F.xxhash64(F.lower(F.trim(F.regexp_replace(text, r"\s+", " "))))
-
-
 def heavy_hitters(df, text_col: str = "text", id_col: str = "doc_id",
                   k: int = 50):
     """Vocabulary heavy hitters: the k terms with the highest DOCUMENT

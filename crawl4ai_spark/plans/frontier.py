@@ -90,8 +90,11 @@ from ..operators.politeness import (
     with_host_slots,
     with_salted_host_slots,
 )
-from ..operators.robots import robots_gate, robots_gate_df
+from ..operators.robots import RULES_SCHEMA, robots_gate_df
 from .checkpoint import SnapshotStore
+
+# perfbench/tracing.py install_spans wraps this name (_FRONTIER_NAMES)
+robots_gate = robots_gate_df
 
 _BIG = 1 << 62  # stands in for math.inf page budgets in long arithmetic
 
@@ -251,7 +254,11 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.cfg = config
-        self.robots_pdf = robots_pdf
+        if isinstance(robots_pdf, pd.DataFrame):
+            robots_pdf = spark.createDataFrame(
+                robots_pdf[["host", "rules", "fetch_time", "status"]],
+                RULES_SCHEMA)
+        self.robots = robots_pdf  # per-host rules DataFrame, or None
         self.politeness = politeness
         self.store = store
         self.metrics: list[dict[str, Any]] = []
@@ -317,14 +324,9 @@ class CrawlEngine:
         (HTTP's fragment-dropping + case-folding stand-in), mirroring the
         oracle's OracleGraph.fetch.
         """
-        rules = self.robots_pdf if self.cfg.check_robots_txt else None
-        if isinstance(rules, DataFrame):
-            # millions-of-hosts path: rules stay a DataFrame, joined on host
-            f = robots_gate_df(f, rules, url_col="fetch_key",
-                               host_col="host", user_agent=self.cfg.user_agent)
-        else:
-            f = robots_gate(f, rules, url_col="fetch_key", host_col="host",
-                            user_agent=self.cfg.user_agent)
+        f = robots_gate_df(
+            f, self.robots if self.cfg.check_robots_txt else None,
+            url_col="fetch_key", host_col="host", user_agent=self.cfg.user_agent)
         if self.politeness is not None:
             if hot_hosts:
                 # semantically equivalent interleaved ranks (conservative
@@ -525,13 +527,19 @@ class CrawlEngine:
     def _restore(self):
         """Load the last committed snapshot (north_rule checkpoint/resume):
         manifest → superstep + counters; orphan dirs from a crashed
-        superstep are deleted; returns None when nothing was committed."""
+        superstep are deleted; returns None when nothing was committed.
+        A manifest without the kernel's counters raises ValueError."""
         if self.store is None:
             return None
         mf = self.store.last_commit()
         if mf is None:
             return None
         s = mf["superstep"]
+        counters = dict(mf["counters"])
+        if "enq_base" not in counters or "result_base" not in counters:
+            raise ValueError(
+                f"snapshot {s} predates the one-kernel loop: its manifest "
+                "lacks the enq_base/result_base counters")
         self.store.clean_orphans(s)
         frontier = self.store.read_one(self.spark, "frontier", s)
         if "fetch_key" not in frontier.columns:
@@ -551,30 +559,8 @@ class CrawlEngine:
             start = upto + 1
         for i in range(start, s + 1):
             p = self.store.read_one(self.spark, "results", i)
-            parts.append(p)
-        parts = [
-            p.withColumn("attempt", F.lit(0))
-            if p is not None and "attempt" not in p.columns
-            # pre-D2 checkpoint: historical parts predate the attempt
-            # column; backfill so the RESULT_COLS union in _finish holds
-            else p
-            for p in parts
-        ]
-        parts = [p for p in parts if p is not None]
-        if "attempt" not in frontier.columns:  # pre-D2 checkpoint
-            frontier = frontier.withColumn("attempt", F.lit(0)).withColumn(
-                "ready", F.lit(0).cast("long")
-            )
-        counters = dict(mf["counters"])
-        if counters.get("enq_base") is None:
-            # pre-enq_base checkpoint: seed from max(seq) over the
-            # restored frontier + results so the first post-resume
-            # discovery can't mint seqs colliding with historical ones
-            seqs = frontier.select("seq")
-            for p in parts:
-                seqs = seqs.unionByName(p.select("seq"))
-            mx = seqs.agg(F.max("seq")).collect()[0][0]
-            counters["enq_base"] = int(mx) + 1 if mx is not None else 0
+            if p is not None:
+                parts.append(p)
         domain_state = self.store.read_one(self.spark, "domain_state", s)
         if domain_state is None:
             domain_state = empty_domain_state_df(self.spark)
@@ -585,7 +571,7 @@ class CrawlEngine:
             "result_parts": parts,
             "counters": counters,
             "domain_state": domain_state,  # DataFrame (never driver pandas)
-            "n_frontier": frontier.count(),
+            "stat": self._frontier_stat(frontier, s + 1),
         }
 
     def _fresh(self, pop: PopPolicy, seeds: list[str]) -> dict:
@@ -616,8 +602,20 @@ class CrawlEngine:
             "result_parts": [],
             "counters": {"pages_crawled": 0, "enq_base": n, "result_base": 0},
             "domain_state": empty_domain_state_df(self.spark),
-            "n_frontier": n,
+            "stat": (n, n - 1, n, 0),
         }
+
+    @staticmethod
+    def _frontier_stat(frontier: DataFrame, superstep: int) -> tuple:
+        """One global aggregate over the frontier: (rows, max queue key,
+        rows eligible at ``superstep``, earliest ready superstep)."""
+        r = frontier.agg(
+            F.count("*"), F.max("seq"),
+            F.sum((F.col("ready") <= F.lit(superstep)).cast("long")),
+            F.min("ready"),
+        ).collect()[0]
+        return (int(r[0]), -1 if r[1] is None else int(r[1]), int(r[2] or 0),
+                None if r[3] is None else int(r[3]))
 
     # ----------------------------------------------------------- kernel
     def _run(self, pop: PopPolicy, seeds: list[str],
@@ -651,37 +649,24 @@ class CrawlEngine:
         domain_state = st["domain_state"]
         pages_crawled = st["counters"]["pages_crawled"]
         enq_base = st["counters"]["enq_base"]
-        result_base = st["counters"].get("result_base", 0)
-        n_frontier = st["n_frontier"]
+        result_base = st["counters"]["result_base"]
+        # the frontier stat (rows, max seq, eligible rows, earliest ready)
+        # is taken when the frontier is made: at restore, after a backoff
+        # fast-forward and from each superstep's end-of-superstep agg
+        n_frontier, _, n_elig, min_ready = st["stat"]
         budget = cfg.politeness_budget
         order = pop.order()
-        # end-of-superstep hint (from the fused frontier agg): eligible
-        # count at superstep+1, earliest ready, per-raw-host max and
-        # empty-host count.  Kills the per-loop eligible-count job and the
-        # budget checkpoint+split when no host can exceed the budget.  The
-        # raw-host grouping is exact for the skip decision: for any
-        # absolute URL the lowered host equals the canonical host (C2 only
-        # lowercases the netloc), and rows without a netloc force the
-        # exact path via the empty-host guard.
-        hint: dict | None = None
         while superstep < cfg.max_supersteps:
             if n_frontier == 0:
                 break
             if pop.stop_at_budget and pages_crawled >= cfg.page_budget:
                 break  # bff :146-149
-            hint_ok = hint is not None and hint["for"] == superstep
             if cfg.backoff:
-                n_elig = (
-                    hint["nready"] if hint_ok
-                    else frontier.filter(F.col("ready") <= F.lit(superstep)).count()
-                )
                 if n_elig == 0:
                     # virtual sleep: jump to the earliest ready superstep
-                    superstep = (
-                        hint["minready"] if hint_ok
-                        else int(frontier.agg(F.min("ready")).collect()[0][0])
-                    )
-                    hint = None
+                    superstep = min_ready
+                    n_frontier, _, n_elig, min_ready = self._frontier_stat(
+                        frontier, superstep)
                     continue
                 eligible = frontier.filter(F.col("ready") <= F.lit(superstep))
             else:
@@ -710,14 +695,7 @@ class CrawlEngine:
                 n_rows = pop.k
             hot = self._hot_hosts(batch, n_rows)
             prep = self._prepare(batch, n_rows, hot)
-            # skip the checkpoint + window split when the hint proves no
-            # host holds more than `budget` frontier rows (the split would
-            # defer nothing) — the common steady-state for wide crawls
-            skip_split = (
-                budget is not None and hint_ok
-                and hint["empty"] == 0 and hint["maxhost"] <= budget
-            )
-            if budget is not None and not skip_split:
+            if budget is not None:
                 prep = prep.localCheckpoint(eager=True)
                 within, deferred = split_host_budget(
                     prep, budget, order, hot_hosts=hot,
@@ -821,39 +799,11 @@ class CrawlEngine:
                 nxt = pushes if carried is None else carried.unionByName(pushes)
             if nxt is None:
                 nxt = frontier.limit(0).select(*FRONTIER_COLS)
-            # lazy checkpoint: the fused agg below is the materializing job
+            # lazy checkpoint: the frontier stat is the materializing job
             nxt = nxt.localCheckpoint(eager=False)
-            # anchored host extract for the skip-split guard: host_of's
-            # bare '://([^/]+)' would pull a "host" out of a query string
-            # ('http//typo?u=https://real.com/x'), hiding a row the
-            # canonical parser maps to host '' — such rows must land in
-            # the `empty` count so the guard forces the exact split path
-            hint_host = F.lower(F.regexp_extract(
-                F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]+)", 1))
-            g = nxt.groupBy(hint_host.alias("__h")).agg(
-                F.count("*").alias("c"),
-                F.max("seq").alias("mx"),
-                F.min("ready").alias("mr"),
-                F.sum((F.col("ready") <= F.lit(superstep + 1)).cast("long")).alias("rdy"),
-            )
-            nstat = g.agg(
-                F.sum("c").alias("n"),
-                F.max("mx").alias("mx"),
-                F.max("c").alias("maxhost"),
-                F.sum(F.when(F.col("__h") == "", F.col("c")).otherwise(F.lit(0))).alias("empty"),
-                F.min("mr").alias("minready"),
-                F.sum("rdy").alias("nready"),
-            ).collect()[0]
-            n_next = int(nstat["n"] or 0)
-            enq_base = max(enq_base, int(nstat["mx"] if nstat["mx"] is not None else -1) + 1)
+            stat = self._frontier_stat(nxt, superstep + 1)
+            enq_base = max(enq_base, stat[1] + 1)
             result_base += n_within
-            hint = {
-                "for": superstep + 1,
-                "nready": int(nstat["nready"] or 0),
-                "minready": None if nstat["minready"] is None else int(nstat["minready"]),
-                "maxhost": int(nstat["maxhost"] or 0),
-                "empty": int(nstat["empty"] or 0),
-            }
             t_disc = time.time()
             result_parts.append(res_future.result())
             t_results = time.time()
@@ -861,8 +811,7 @@ class CrawlEngine:
                 superstep=superstep, popped=n_within, eligible=n_elig,
                 deferred=n_deferred, waiting=n_wait,
                 successes=n_success, pages_crawled=pages_crawled,
-                frontier_out=n_next, hot_hosts=len(hot),
-                budget_split_skipped=bool(skip_split),
+                frontier_out=stat[0], hot_hosts=len(hot),
                 wall_ms=int((time.time() - t0) * 1000),
                 phase_ms={
                     "split": int((t_split - t0) * 1000),
@@ -880,7 +829,7 @@ class CrawlEngine:
             if popped is not None:  # consumed by the frontier checkpoint
                 popped.unpersist()
             frontier = nxt
-            n_frontier = n_next
+            n_frontier, _, n_elig, min_ready = stat
             superstep += 1
         return self._finish(
             result_parts, seen, pages_crawled,

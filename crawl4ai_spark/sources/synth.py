@@ -23,7 +23,7 @@ case-insensitive-host behavior.
 from __future__ import annotations
 
 import struct
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
@@ -339,14 +339,6 @@ def synth_tables(spark, p: GraphParams, parallelism: int | None = None):
     links = base.mapInPandas(_map_ids(gen_links_batch, p), LINKS_SCHEMA)
     images = base.mapInPandas(_map_ids(gen_images_batch, p), IMAGES_SCHEMA)
     return pages, links, images
-
-
-def write_synth(spark, p: GraphParams, outdir: str, images: bool = True) -> None:
-    pages, links, imgs = synth_tables(spark, p)
-    pages.write.mode("overwrite").parquet(f"{outdir}/pages.parquet")
-    links.write.mode("overwrite").parquet(f"{outdir}/links.parquet")
-    if images:
-        imgs.write.mode("overwrite").parquet(f"{outdir}/images.parquet")
 
 
 def synth_local(p: GraphParams, images: bool = False):

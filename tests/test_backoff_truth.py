@@ -181,7 +181,7 @@ def test_robots_truth_table_engine_and_oracle(status, expect_gated):
         [{"host": "t.test", "rules": ROBOTS_TXT, "fetch_time": 1, "status": status}]
     )
     allowed = robots_allower(pdf)  # oracle side
-    rules = effective_rules(ROBOTS_TXT, 1, status, now=2)  # engine side
+    rules = effective_rules(ROBOTS_TXT, status)  # engine side
     urls = [u_ for u_, _ in ROBOTS_TRUTH]
     engine_verdicts = allowed_for(urls, rules)
     for (url, want), engine_ok in zip(ROBOTS_TRUTH, engine_verdicts):

@@ -118,6 +118,25 @@ def test_every_strategy_resumes_from_every_superstep(
     assert _rows(engine(store).run(seeds, resume=True)) == want
 
 
+@pytest.mark.parametrize("counter", ["enq_base", "result_base"])
+def test_resume_refuses_a_manifest_without_kernel_counters(
+        spark, tables, tmp_path, counter):
+    """A manifest without enq_base or result_base comes from before the
+    one-kernel loop: resuming it raises instead of guessing the counter."""
+    pages_df, links_df = tables
+    seeds = [url_of(0, PARAMS)]
+    store = SnapshotStore(str(tmp_path / "old"))
+    CrawlEngine(spark, pages_df, links_df,
+                CrawlConfig(max_depth=2, max_supersteps=1), store=store).run(seeds)
+    mf = store.last_commit()
+    del mf["counters"][counter]
+    store.commit(mf["superstep"], mf["counters"])
+    engine = CrawlEngine(spark, pages_df, links_df, CrawlConfig(max_depth=2),
+                         store=store)
+    with pytest.raises(ValueError, match="predates the one-kernel loop"):
+        engine.run(seeds, resume=True)
+
+
 def test_orphan_cleanup(spark, tables, tmp_path):
     pages_df, links_df = tables
     store = SnapshotStore(str(tmp_path / "ckpt2"))

@@ -186,8 +186,7 @@ def test_config_rejects_invalid(kw):
 
 METRIC_KEYS = {
     "superstep", "popped", "eligible", "deferred", "waiting", "successes",
-    "pages_crawled", "frontier_out", "hot_hosts", "budget_split_skipped",
-    "wall_ms", "phase_ms",
+    "pages_crawled", "frontier_out", "hot_hosts", "wall_ms", "phase_ms",
 }
 
 

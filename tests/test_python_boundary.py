@@ -82,6 +82,13 @@ def test_driver_built_frames_are_jvm_local(spark, tables):
     assert not _python_rdd(empty_domain_state_df(spark))
     done = engine._finish([], empty["seen"], 0, order=["seq"])
     assert not _python_rdd(done.results) and done.results.count() == 0
+    # the robots rules table, from pandas with an all-null rules column
+    rules = pd.DataFrame({"host": ["a.test", "b.test"], "rules": [None, None],
+                          "fetch_time": [1, 2], "status": [599, 404]})
+    robots = CrawlEngine(spark, *tables, CrawlConfig(), robots_pdf=rules).robots
+    assert not _python_rdd(robots)
+    assert [tuple(r) for r in robots.collect()] == [
+        ("a.test", None, 1, 599), ("b.test", None, 2, 404)]
 
 
 def test_prepare_runs_no_python(spark, tables):

@@ -7,7 +7,7 @@ result without fetching (async_webcrawler.py:361-370)."""
 import pandas as pd
 from pyspark.sql import functions as F
 
-from crawl4ai_spark.operators.robots import allowed_for, robots_gate
+from crawl4ai_spark.operators.robots import RULES_SCHEMA, allowed_for, robots_gate_df
 
 RULES = "User-agent: *\nAllow: /public/\nDisallow: /private/\n"
 
@@ -49,9 +49,10 @@ def test_robots_gate_dataframe(spark):
         ],
         "fetch_key string, host string",
     )
+    rules_df = spark.createDataFrame(robots_pdf, RULES_SCHEMA)
     got = {
         r["fetch_key"]: r["robots_allowed"]
-        for r in robots_gate(df, robots_pdf).collect()
+        for r in robots_gate_df(df, rules_df).collect()
     }
     assert got == {
         "https://a.test/public/x": True,
@@ -90,10 +91,10 @@ def test_engine_robots_403(spark):
 
 
 def test_robots_gate_df_matches_dict_gate(spark):
-    # the DataFrame-join scale path must reproduce the broadcast-dict gate's
-    # allow/deny decisions exactly, including every allow-on-error case and
-    # a host with no rules row at all
-    from crawl4ai_spark.operators.robots import robots_gate, robots_gate_df
+    # the gate must reproduce the oracle's independent dict-keyed twin
+    # (oracle/crawler.robots_allower) exactly, including every
+    # allow-on-error case and a host with no rules row at all
+    from crawl4ai_spark.oracle.crawler import robots_allower
     from crawl4ai_spark.sources.synth import GraphParams, gen_robots
 
     p = GraphParams(n_pages=40, n_domains=8)
@@ -105,24 +106,16 @@ def test_robots_gate_df_matches_dict_gate(spark):
             rows.append((u, f"ex{d}.test"))
     rows.append(("https://norules.test/a", "norules.test"))
     df = spark.createDataFrame(rows, "fetch_key string, host string")
-    want = {
-        r["fetch_key"]: r["robots_allowed"]
-        for r in robots_gate(df, rules_pdf).collect()
-    }
-    rules_df = spark.createDataFrame(rules_pdf)
+    allowed = robots_allower(rules_pdf)
+    want = {u: allowed(h, u) for u, h in rows}
     got = {
         r["fetch_key"]: r["robots_allowed"]
-        for r in robots_gate_df(df, rules_df).collect()
+        for r in robots_gate_df(
+            df, spark.createDataFrame(rules_pdf, RULES_SCHEMA)).collect()
     }
     assert got == want
     assert got["https://norules.test/a"] is True
     assert not all(want.values())  # some URL is actually denied
-    # shuffle-join variant (co-partitioned path) identical too
-    got2 = {
-        r["fetch_key"]: r["robots_allowed"]
-        for r in robots_gate_df(df, rules_df, broadcast_rules=False).collect()
-    }
-    assert got2 == want
 
 
 def test_crawl_delay_stage(spark):
