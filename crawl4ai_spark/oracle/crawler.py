@@ -476,8 +476,10 @@ def _host_of_py(url: str) -> str:
 def robots_allower(robots_pdf, user_agent: str = "*", now: int = 1_700_000_000):
     """Independent robots twin, re-derived from the reference can_fetch
     (utils.py:276-328): only a 200 robots fetch yields rules (any other
-    status / missing body ⇒ allow-all, :304-315); stdlib RobotFileParser
-    longest-match over those rules; every parse/evaluate failure allows."""
+    status / missing body ⇒ allow-all, :304-315); the stdlib
+    RobotFileParser over those rules, which applies the first rule line
+    that matches, in file order (not the longest match); every
+    parse/evaluate failure allows."""
     from urllib.robotparser import RobotFileParser
 
     rules_by_host = {

@@ -73,7 +73,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..dist import empty_frame, with_global_cumsum, with_global_seq
 from ..functions.canonical import (
-    canonical_col,
+    canonical_col,  # noqa: F401  (wrapped by perfbench/tracing.py install_spans)
     fetch_key_of,
     join_and_canonicalize_udf,
     join_url_udf,
@@ -262,6 +262,8 @@ class CrawlEngine:
         self.politeness = politeness
         self.store = store
         self.metrics: list[dict[str, Any]] = []
+        self._codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        self._compiled = 0  # codegen compile count at the last record
         # page lookup keyed by canonical URL; only the columns the engine
         # touches (column pruning reaches the parquet scan).
         self.pages_kv = pages.select(
@@ -528,7 +530,8 @@ class CrawlEngine:
         """Load the last committed snapshot (north_rule checkpoint/resume):
         manifest → superstep + counters; orphan dirs from a crashed
         superstep are deleted; returns None when nothing was committed.
-        A manifest without the kernel's counters raises ValueError."""
+        A manifest without the kernel's counters, or a frontier without
+        ``fetch_key``, raises ValueError."""
         if self.store is None:
             return None
         mf = self.store.last_commit()
@@ -543,10 +546,9 @@ class CrawlEngine:
         self.store.clean_orphans(s)
         frontier = self.store.read_one(self.spark, "frontier", s)
         if "fetch_key" not in frontier.columns:
-            # snapshot written before the key was stored: key it once here
-            frontier = frontier.withColumn(
-                "fetch_key", canonical_col(F.col("url"), F.col("url"))
-            ).localCheckpoint(eager=True)
+            raise ValueError(
+                f"snapshot {s} predates the stored fetch key: its frontier "
+                "lacks the fetch_key column")
         seen = self.store.read_one(self.spark, "seen", s)
         parts = []
         start = 0
@@ -643,6 +645,7 @@ class CrawlEngine:
             marked from its first attempt.
         """
         cfg = self.cfg
+        self._compiled = self._codegen_count()
         st = (self._restore() if resume else None) or self._fresh(pop, seeds)
         frontier, seen = st["frontier"], st["seen"]
         superstep, result_parts = st["superstep"], st["result_parts"]
@@ -864,7 +867,20 @@ class CrawlEngine:
             self.store.write_json("metrics", superstep, entry)
         self.store.commit(superstep, counters)
 
+    def _codegen_count(self) -> int:
+        return int(self._codegen.METRIC_COMPILATION_TIME().getCount())
+
     def _log(self, **kw) -> None:
+        """Append one superstep's metrics record.  ``codegen_compiles`` is
+        the number of classes Spark's code generator compiled since the
+        previous record (since the run started, for the first): the misses
+        of its generated-class cache, which ``session.get_spark`` sizes to
+        the crawl's working set, so a warm crawl reads 0.  The counter is
+        this JVM's: in cluster mode it counts only the driver's compiles,
+        not the executors'."""
+        n = self._codegen_count()
+        kw["codegen_compiles"] = n - self._compiled
+        self._compiled = n
         self.metrics.append(kw)
 
     def _finish(self, parts: list[DataFrame], seen: DataFrame,

@@ -4,6 +4,36 @@ Defaults chosen for the 100 TB design point, applied equally at local[32]:
 AQE on (runtime re-plan + skew-join splitting), Arrow enabled for every
 pandas-UDF stage (no per-row Python, per north_rule), shuffle partitions
 scaled with parallelism.
+
+The generated-class cache (``spark.sql.codegen.cache.maxEntries``, a static
+conf) holds 1000 entries instead of Spark's 100.  An entry is one compiled
+source text per class loader, so a whole-stage class the driver compiles
+and a task compiles again takes two.  A crawl session's working set is
+larger than 100 entries, so with the default the least-recently-used
+entries were dropped and recompiled in every crawl: about 99 compiles per
+warm ``bfs_payload`` crawl and 210 per ``polite_resume`` crawl
+(``perfbench/`` workloads), and about 110 in every superstep of a 10-pop
+best-first crawl.  Measured on a 4-vCPU VM:
+
+  - working set: one session running both bench workloads (set-up,
+    warm-up, 8 crawls and 3 decodes each, reference jobs) compiled
+    420-433 entries (about 900 classes) with a cache too large to evict;
+    one best-first crawl compiles about 235;
+  - class size: 2.0 KB mean, 9.9 KB max bytecode; an entry's source text
+    4.2K characters mean, 15.6K max;
+  - size: at 250 entries a repeated crawl of either workload compiled 0,
+    but the session compiled 449 entries, so it evicted between
+    workloads; at 500, 1000, 2000, 4000 and 100000 it compiled the same
+    418-433, so 500 is the smallest tested size that holds the session.
+    The cache is 4 LRU segments of maxEntries/4 that fill unevenly by
+    hash, so 1000 gives each segment about twice the ~110 entries it
+    gets;
+  - memory: entries of 42K source characters and four classes each (2.7x
+    the largest crawl entry) cost 107-115 KB of heap and 26-33 KB of
+    Metaspace apiece, so a full cache of 1000 holds at most about 150 MB.
+
+``CrawlEngine`` logs the compiles of every superstep as
+``codegen_compiles``; a repeated crawl reads 0.
 """
 
 from __future__ import annotations
@@ -43,6 +73,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -3,14 +3,14 @@ live crawl result stream (D2 as Structured Streaming).
 
 The batch engine folds reference RateLimiter semantics
 (async_dispatcher.py:67-87) once per superstep
-(operators/politeness.update_domain_state / fold_domain_state_dist).  A
-monitoring/operations consumer tailing the crawl (streaming/results.py)
-wants the SAME state live — so this module re-expresses the fold as an
-``applyInPandasWithState`` operator: state key = host, state value =
-(current_delay, fail_count, give_up, last_superstep), each micro-batch
-folds its rows in (superstep, seq) order through the identical
-``update_domain_state`` code path, and emits one snapshot row per touched
-host per batch.
+(operators/politeness.update_domain_state, run per host bucket by
+fold_domain_state_df).  A monitoring/operations consumer tailing the crawl
+(streaming/results.py) wants the SAME state live — so this module
+re-expresses the fold as an ``applyInPandasWithState`` operator: state
+key = host, state value = (current_delay, fail_count, give_up,
+last_superstep), each micro-batch folds its rows in (superstep, seq)
+order through the identical ``update_domain_state`` code path, and emits
+one snapshot row per touched host per batch.
 
 Determinism contract: the fold is order-sensitive only WITHIN a host; rows
 of a host are sorted by (superstep, seq) inside each micro-batch, so any

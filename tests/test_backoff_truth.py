@@ -10,7 +10,8 @@ derived here, in the test file, from the reference semantics directly:
     give up past max_retries, delay = min(delay*2*uniform(.75,1.25), max);
     success -> delay = max(uniform(base), delay*0.75), fail_count = 0.
   - robots can_fetch (reference utils.py:276-328): only a 200 fetch yields
-    rules; stdlib RobotFileParser longest-match; every error path allows.
+    rules; stdlib RobotFileParser, first matching rule line in file order;
+    every error path allows.
 
 The determinization spec replaces each uniform draw with
 lo + (hi-lo) * xxh64(tag)/2^64 for documented tags.  The expected values

@@ -101,7 +101,9 @@ def test_every_strategy_resumes_from_every_superstep(
     # row count (north_rule lineage requirement)
     for s in steps[:-1]:
         with open(os.path.join(root, "metrics", f"{s:06d}", "data.json")) as f:
-            lin = json.load(f)["lineage"]
+            rec = json.load(f)
+        assert rec["codegen_compiles"] >= 0
+        lin = rec["lineage"]
         for table in ("results", "frontier", "seen"):
             snap = store.read_one(spark, table, s)
             assert sum(p["rows"] for p in lin[table]) == snap.count()

@@ -187,6 +187,7 @@ def test_config_rejects_invalid(kw):
 METRIC_KEYS = {
     "superstep", "popped", "eligible", "deferred", "waiting", "successes",
     "pages_crawled", "frontier_out", "hot_hosts", "wall_ms", "phase_ms",
+    "codegen_compiles",
 }
 
 
@@ -201,3 +202,31 @@ def test_every_strategy_logs_one_metrics_schema(spark, spark_tables):
             assert set(m) == METRIC_KEYS, (strategy, sorted(m))
             assert set(m["phase_ms"]) == {
                 "split", "fetch", "discover", "results_wait"}, strategy
+
+
+def test_a_repeated_crawl_compiles_no_classes(spark, spark_tables):
+    """Spark's generated-class cache holds the crawl's working set: after
+    its first supersteps a best-first crawl compiles only the few classes
+    whose inlined literals change each superstep, and the same crawl run
+    again compiles nothing (with Spark's default 100-entry cache, every
+    superstep recompiled about 110 classes)."""
+    pages_df, links_df = spark_tables
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    # 58 results over 11 supersteps of 10 pops
+    cfg = CrawlConfig(strategy="best_first", max_depth=5, max_pages=50,
+                      batch_size=10, scorer=SCORER)
+    runs = []
+    for _ in range(2):
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        run = deep_crawl(spark, [url_of(1, PARAMS)], pages_df, links_df, cfg)
+        rows = run.results.collect()
+        runs.append((run, rows,
+                     codegen.METRIC_COMPILATION_TIME().getCount() - before))
+    (first, first_rows, _), (second, second_rows, second_compiles) = runs
+    assert len(first.metrics) >= 8
+    assert second_rows == first_rows
+    assert second_compiles == 0
+    assert [m["codegen_compiles"] for m in second.metrics] == [0] * len(
+        second.metrics)
+    late = [m["codegen_compiles"] for m in first.metrics if m["superstep"] >= 3]
+    assert late and max(late) <= 10, late

@@ -149,29 +149,6 @@ def test_budget_preserves_plain_coverage(spark, world):
     assert len(budgeted) <= len(plain)
 
 
-def test_domain_state_fold_dist_matches_driver(spark):
-    from crawl4ai_spark.operators.politeness import (
-        empty_domain_state,
-        fold_domain_state_dist,
-        update_domain_state,
-    )
-
-    rows = [
-        ("a.test", 0, 429), ("a.test", 1, 200), ("a.test", 2, 503),
-        ("b.test", 3, 503), ("b.test", 4, 503), ("b.test", 5, 503),
-        ("b.test", 6, 503), ("b.test", 7, 503), ("c.test", 8, 200),
-    ]
-    pdf = pd.DataFrame(rows, columns=["host", "seq", "status_code"])
-    df = spark.createDataFrame(pdf)
-    want = update_domain_state(empty_domain_state(), pdf, seed=7, superstep=3)
-    got = fold_domain_state_dist(empty_domain_state(), df, seed=7, superstep=3)
-    pd.testing.assert_frame_equal(
-        got.reset_index(drop=True), want.reset_index(drop=True),
-        check_dtype=False,
-    )
-    assert bool(want.loc[want.host == "b.test", "give_up"].iloc[0])
-
-
 def test_domain_state_fold_df_matches_driver(spark):
     """The DataFrame-resident fold (no driver round-trip, VERDICT r2 #2)
     equals two sequential driver folds: touched hosts advance, untouched
