@@ -312,7 +312,6 @@ def entry(spark: SparkSession) -> DataFrame:
         links=links,
         config=cfg,
         robots_pdf=synth.gen_robots(p),
-        politeness=spark.createDataFrame(synth.gen_politeness(p)),
     )
     return run.results
 
@@ -1207,7 +1206,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         run = deep_crawl(
             spark, [synth.url_of(0, p)], pages, links, cfg,
             robots_pdf=synth.gen_robots(p),
-            politeness=spark.createDataFrame(synth.gen_politeness(p)),
         )
         return run.results.select(
             "superstep", "seq", "url", "host", "depth", "success", "status_code",

@@ -36,28 +36,33 @@ MAX_RETRIES = 3  # :35
 RATE_LIMIT_CODES = (429, 503)  # :36
 
 
+def _join_delay(df: DataFrame, politeness: DataFrame | None, host_col: str,
+                default_delay: float):
+    """(``df``, per-row delay column) for the send-slot operators.
+    ``politeness`` is the small (host, delay_s, ...) dimension, broadcast
+    joined as ``__delay_s`` (callers drop it).  One dim row per host: a
+    duplicate host row would fan every frontier row for that host into
+    duplicate fetches (robots_gate_df guards its dim the same way);
+    conflicting rows merge to the MAX delay, the most conservative
+    (fail-safe) one."""
+    if politeness is None:
+        return df, F.lit(default_delay)
+    dim = politeness.groupBy(host_col).agg(F.max("delay_s").alias("__delay_s"))
+    df = df.join(F.broadcast(dim), host_col, "left")
+    return df, F.coalesce(F.col("__delay_s"), F.lit(default_delay))
+
+
 def with_host_slots(df: DataFrame, politeness: DataFrame | None,
                     order_cols: list[str], host_col: str = "host",
                     default_delay: float = 2.0) -> DataFrame:
     """Add ``host_rank`` (0-based fetch order within host) and ``send_at_s``
     (virtual send slot = host_rank × delay_s).  ``politeness`` is the small
     (host, delay_s, ...) dimension — broadcast joined."""
-    if politeness is not None:
-        # one dim row per host: a duplicate host row in the dim would fan
-        # every frontier row for that host into duplicate fetches
-        # (robots_gate_df guards its dim the same way); conflicting rows
-        # merge to the MAX delay, the most conservative (fail-safe) one
-        dim = politeness.groupBy(host_col).agg(
-            F.max("delay_s").alias("delay_s"))
-        df = df.join(F.broadcast(dim), host_col, "left")
-        delay = F.coalesce(F.col("delay_s"), F.lit(default_delay))
-    else:
-        delay = F.lit(default_delay)
+    df, delay = _join_delay(df, politeness, host_col, default_delay)
     w = Window.partitionBy(host_col).orderBy(*order_cols)
     df = df.withColumn("host_rank", F.row_number().over(w) - 1)
     return df.withColumn("send_at_s", F.col("host_rank") * delay).drop(
-        *( ["delay_s"] if politeness is not None else [] )
-    )
+        "__delay_s")
 
 
 def apply_host_budget(df: DataFrame, budget: int | None,
@@ -149,28 +154,25 @@ def split_per_host_budget(df: DataFrame, budgets: DataFrame,
     staggers long-period hosts across supersteps instead of thundering
     them on superstep 0.
 
-    The dimension is de-duplicated on host and broadcast, so this adds no
-    shuffle beyond the same per-host rank window the global split pays;
+    The dimension is merged to one row per host and broadcast, so this adds
+    no shuffle beyond the same per-host rank window the global split pays.
+    Conflicting rows merge fail-safe: the smallest budget (a NULL budget
+    counts as ``default_budget``) and the longest period;
     for hot hosts compose with the two-phase salted ranking exactly as
     ``split_host_budget`` does (a per-host cap only tightens it)."""
     has_period = superstep is not None and period_col in budgets.columns
-    dim_cols = [
-        F.col(host_col).alias("__b_host"),
-        F.col(budget_col).cast("int").alias("__b_budget"),
-    ]
+    default = F.lit(default_budget).cast("int")
+    merged = [F.min(F.coalesce(F.col(budget_col).cast("int"), default))
+              .alias("__b_budget")]
     if has_period:
-        dim_cols.append(F.col(period_col).cast("int").alias("__b_period"))
+        merged.append(F.max(F.col(period_col).cast("int")).alias("__b_period"))
     dim = F.broadcast(
-        budgets.select(*dim_cols).dropDuplicates(["__b_host"]))
+        budgets.groupBy(F.col(host_col).alias("__b_host")).agg(*merged))
     w = Window.partitionBy(host_col).orderBy(*order_cols)
     r = (
         df.withColumn("__rn", F.row_number().over(w))
         .join(dim, F.col(host_col) == F.col("__b_host"), "left")
-        .withColumn(
-            "__eff",
-            F.coalesce("__b_budget",
-                       F.lit(default_budget).cast("int")),
-        )
+        .withColumn("__eff", F.coalesce("__b_budget", default))
     )
     drop = ["__rn", "__b_host", "__b_budget", "__eff"]
     ok = F.col("__eff").isNull() | (F.col("__rn") <= F.col("__eff"))
@@ -334,17 +336,7 @@ def with_salted_host_slots(df: DataFrame, politeness: DataFrame | None,
     equivalent."""
     if not hot_hosts or salt_buckets <= 1:
         return with_host_slots(df, politeness, order_cols, host_col, default_delay)
-    if politeness is not None:
-        # one dim row per host: a duplicate host row in the dim would fan
-        # every frontier row for that host into duplicate fetches
-        # (robots_gate_df guards its dim the same way); conflicting rows
-        # merge to the MAX delay, the most conservative (fail-safe) one
-        dim = politeness.groupBy(host_col).agg(
-            F.max("delay_s").alias("delay_s"))
-        df = df.join(F.broadcast(dim), host_col, "left")
-        delay = F.coalesce(F.col("delay_s"), F.lit(default_delay))
-    else:
-        delay = F.lit(default_delay)
+    df, delay = _join_delay(df, politeness, host_col, default_delay)
     is_hot = F.col(host_col).isin(hot_hosts)
     salt = F.when(
         is_hot, F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt_buckets))
@@ -355,8 +347,7 @@ def with_salted_host_slots(df: DataFrame, politeness: DataFrame | None,
     rank = F.when(is_hot, local * salt_buckets + F.col("__salt")).otherwise(local)
     df = df.withColumn("host_rank", rank.cast("long"))
     return df.withColumn("send_at_s", F.col("host_rank") * delay).drop(
-        "__salt", *(["delay_s"] if politeness is not None else [])
-    )
+        "__salt", "__delay_s")
 
 
 def salt_hot_hosts(df: DataFrame, hot_hosts: list[str], buckets: int,

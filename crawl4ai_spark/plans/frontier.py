@@ -2,11 +2,11 @@
 
 Every reference traversal loop (SURVEY §2.5) runs as ONE superstep kernel
 (``CrawlEngine._run``) whose body is one declarative DataFrame DAG per
-superstep: pop → mark-seen → robots/politeness gates + fetch → persist
-results → link discovery → push → commit → log.  Restore, the D1 budget
-split, D2 backoff, the end-of-superstep frontier agg, snapshot commits and
-the metrics record are shared; a pop policy (``PopPolicy``) supplies only
-what differs:
+superstep: pop → mark-seen → D1 budget split → robots gate + fetch →
+persist results → link discovery → push → commit → log.  Restore, the D1
+budget split, D2 backoff, the end-of-superstep frontier agg, snapshot
+commits and the metrics record are shared; a pop policy (``PopPolicy``)
+supplies only what differs:
 
   level (BFS, bfs_strategy.py:141-187) — pop every eligible row in
        (depth, seq) order; no visited check at pop; discovery on canonical
@@ -32,13 +32,16 @@ same dataflow both ways:
   anti-join seen → per-parent capacity truncation (windows reproducing the
   reference's conditional sort-then-truncate) → dense global sequence.
 
-That UDF pass is the crawl's only Python stage.  It also returns each
-pushed row's fetch key, ``fetch_key_of(url)``, which the frontier row
-carries (seeds are keyed on the driver), so the pop derives the fetch host
-in the JVM.  Frames the driver builds are JVM-local (a pandas seed frame,
-typed empty projections), never a PythonRDD, and ``with_global_seq``
-assigns its offsets in the JVM: each Python worker invocation costs a
-fixed share of CPU whatever its row count (see ``_ROWS_PER_TASK``).
+That UDF pass is the only Python stage of a plain crawl; the robots gate
+(a ``mapInPandas``, with ``check_robots_txt``) and the D2 backoff fold (a
+cogroup ``applyInPandas``, with ``backoff``) add one each.  The UDF pass
+also returns each pushed row's fetch key, ``fetch_key_of(url)``, which the
+frontier row carries (seeds are keyed on the driver), so the pop derives
+the fetch host in the JVM.  Frames the driver builds are JVM-local (a
+pandas seed frame, typed empty projections), never a PythonRDD, and
+``with_global_seq`` assigns its offsets in the JVM: each Python worker
+invocation costs a fixed share of CPU whatever its row count (see
+``_ROWS_PER_TASK``).
 
 Scale notes (the 100 TB design):
   - every per-level global ordering uses ``with_global_seq`` (range
@@ -54,8 +57,11 @@ Scale notes (the 100 TB design):
   - fetch joins are hash joins on the canonical fetch key; the pages/links
     tables would be Iceberg-bucketed by that key in production so the join
     co-locates without shuffle;
-  - politeness slots/budgets and hot-host salting plug in around the fetch
-    join (operators/politeness.py) without changing crawl semantics.
+  - the D1 budget split and hot-host salting run before the fetch join
+    (operators/politeness.py); salting changes execution, never crawl
+    semantics.  Politeness is the budget split alone: virtual send slots
+    (``with_host_slots``) would be read by no result, metric or retry, so
+    the kernel does not compute them.
 """
 
 from __future__ import annotations
@@ -87,8 +93,8 @@ from ..operators.politeness import (
     fold_domain_state_df,
     salt_hot_hosts,
     split_host_budget,
-    with_host_slots,
-    with_salted_host_slots,
+    with_host_slots,  # noqa: F401  (wrapped by perfbench/tracing.py install_spans)
+    with_salted_host_slots,  # noqa: F401  (likewise; the kernel calls neither)
 )
 from ..operators.robots import RULES_SCHEMA, robots_gate_df
 from .checkpoint import SnapshotStore
@@ -135,7 +141,7 @@ class CrawlConfig:
     seed: int = 42  # deterministic backoff jitter (north_rule parity)
     # D7: hosts with more than this many frontier rows in one superstep are
     # salted across salt_buckets sub-partitions (execution-only: the budget
-    # split and slot ranks stay exactly the unsalted semantics).
+    # split stays exactly the unsalted semantics).
     hot_host_rows: int = 100_000
     salt_buckets: int = 16
     max_supersteps: int = 10_000
@@ -221,10 +227,11 @@ class CrawlRun:
     pages_crawled: int
 
 
-RESULT_COLS = [
-    "superstep", "seq", "url", "fetch_key", "host", "depth", "parent",
-    "score", "success", "status_code", "attempt", "image_id",
-]
+RESULT_SCHEMA = (
+    "superstep int, seq long, url string, fetch_key string, host string, "
+    "depth int, parent string, score double, success boolean, "
+    "status_code int, attempt int, image_id string"
+)
 
 # Frontier row, one schema for every strategy: ``fetch_key`` is the
 # canonical fetch key, ``fetch_key_of(url)``, stored when the row is pushed
@@ -233,12 +240,13 @@ RESULT_COLS = [
 # discovery order, and also the emitted result ``seq``; heap: the push id;
 # stack: higher pops first).  ``attempt`` counts backoff retries; ``ready``
 # is the earliest superstep the row may fetch in.
-FRONTIER_COLS = ["url", "fetch_key", "parent", "depth", "seq", "score",
-                 "attempt", "ready"]
 FRONTIER_SCHEMA = (
     "url string, fetch_key string, parent string, depth int, seq long, "
     "score double, attempt int, ready long"
 )
+
+RESULT_COLS = [f.split()[0] for f in RESULT_SCHEMA.split(",")]
+FRONTIER_COLS = [f.split()[0] for f in FRONTIER_SCHEMA.split(",")]
 
 
 class CrawlEngine:
@@ -252,6 +260,8 @@ class CrawlEngine:
         politeness: DataFrame | None = None,
         store: SnapshotStore | None = None,
     ):
+        """``politeness`` is accepted and ignored: the superstep computes
+        no send slots (module docstring), so nothing would read it."""
         self.spark = spark
         self.cfg = config
         if isinstance(robots_pdf, pd.DataFrame):
@@ -259,7 +269,6 @@ class CrawlEngine:
                 robots_pdf[["host", "rules", "fetch_time", "status"]],
                 RULES_SCHEMA)
         self.robots = robots_pdf  # per-host rules DataFrame, or None
-        self.politeness = politeness
         self.store = store
         self.metrics: list[dict[str, Any]] = []
         self._codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
@@ -310,17 +319,19 @@ class CrawlEngine:
         # Hash-partition on host, sized to the batch: (a) sizes the robots
         # gate's Arrow stage to the batch (each of its partitions is one
         # Python worker invocation per job); (b) co-partitions for the
-        # robots memo and the politeness window (Window.partitionBy(host)
-        # reuses this exchange — no extra shuffle); (c) hot hosts fan out
-        # over salted sub-keys so one domain can never pin a whole task (D7).
+        # robots memo and the D1 budget split's rank window
+        # (Window.partitionBy(host) reuses this exchange — no extra
+        # shuffle); (c) hot hosts fan out over salted sub-keys so one
+        # domain can never pin a whole task (D7).
         if hot_hosts:
             f = salt_hot_hosts(f, hot_hosts, self.cfg.salt_buckets,
                                url_col="url")
             return f.repartition(self._parts(n_rows), "host_part").drop("host_part")
         return f.repartition(self._parts(n_rows), "host")
 
-    def _fetch(self, f: DataFrame, hot_hosts: list[str]) -> DataFrame:
-        """S2/P8/D1: robots gate → politeness slots → synthetic fetch join.
+    def _fetch(self, f: DataFrame) -> DataFrame:
+        """S2/P8: robots gate → synthetic fetch join, over the rows the D1
+        budget split let through.
 
         The synthetic fetch resolves any raw URL to its canonical page
         (HTTP's fragment-dropping + case-folding stand-in), mirroring the
@@ -329,16 +340,6 @@ class CrawlEngine:
         f = robots_gate_df(
             f, self.robots if self.cfg.check_robots_txt else None,
             url_col="fetch_key", host_col="host", user_agent=self.cfg.user_agent)
-        if self.politeness is not None:
-            if hot_hosts:
-                # semantically equivalent interleaved ranks (conservative
-                # slots), no single-task-per-host window (politeness.py)
-                f = with_salted_host_slots(
-                    f, self.politeness, order_cols=["seq"],
-                    hot_hosts=hot_hosts, salt_buckets=self.cfg.salt_buckets,
-                )
-            else:
-                f = with_host_slots(f, self.politeness, order_cols=["seq"])
         joined = f.join(
             self.pages_kv, f["fetch_key"] == self.pages_kv["page_url"], "left"
         ).drop("page_url")
@@ -623,7 +624,7 @@ class CrawlEngine:
     def _run(self, pop: PopPolicy, seeds: list[str],
              resume: bool = False) -> CrawlRun:
         """The superstep kernel every traversal runs: pop → mark-seen →
-        robots/politeness gates + fetch → persist results → discover →
+        budget split → robots gate + fetch → persist results → discover →
         push → commit → log.  ``pop`` supplies only what differs between
         the traversals (see PopPolicy).
 
@@ -721,7 +722,7 @@ class CrawlEngine:
                     num_partitions=self._parts(pop.k),
                 ).withColumnRenamed("seq", "qseq").withColumnRenamed("rseq", "seq")
             t_split = time.time()
-            fetched = self._fetch(within, hot_hosts=hot)
+            fetched = self._fetch(within)
             if pop.kind == "level":
                 # duplicate-URL quirk (bfs_strategy.py:174): every result
                 # of a URL that appears twice in a superstep reports the
@@ -890,12 +891,7 @@ class CrawlEngine:
             for p in parts[1:]:
                 results = results.unionByName(p)
         else:
-            results = empty_frame(
-                self.spark,
-                "superstep int, seq long, url string, fetch_key string, host string, "
-                "depth int, parent string, score double, success boolean, "
-                "status_code int, attempt int, image_id string",
-            )
+            results = empty_frame(self.spark, RESULT_SCHEMA)
         if self.cfg.fetch_ssl_certificate:
             from ..operators.sslcert import ssl_certificate_stage
             from ..sources.sslsynth import host_certs_df
@@ -923,12 +919,10 @@ def deep_crawl(
     links: DataFrame,
     config: CrawlConfig,
     robots_pdf=None,
-    politeness: DataFrame | None = None,
     store: SnapshotStore | None = None,
 ) -> CrawlRun:
     """Entry point (reference: strategy.arun via DeepCrawlDecorator,
     deep_crawling/base_strategy.py:10-43)."""
     return CrawlEngine(
-        spark, pages, links, config, robots_pdf=robots_pdf,
-        politeness=politeness, store=store,
+        spark, pages, links, config, robots_pdf=robots_pdf, store=store,
     ).run(seeds)

@@ -32,13 +32,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.checkpoint import SnapshotStore
-from ..plans.frontier import RESULT_COLS, CrawlConfig, CrawlEngine
-
-RESULTS_SCHEMA = (
-    "superstep int, seq long, url string, fetch_key string, host string, "
-    "depth int, parent string, score double, success boolean, "
-    "status_code int, attempt int, image_id string"
-)
+from ..plans.frontier import RESULT_SCHEMA, CrawlConfig, CrawlEngine
 
 
 def stream_crawl(
@@ -119,7 +113,7 @@ def results_readstream(spark: SparkSession, store: SnapshotStore) -> DataFrame:
     path = os.path.join(store.root, "results")
     os.makedirs(path, exist_ok=True)
     return (
-        spark.readStream.schema(RESULTS_SCHEMA)
+        spark.readStream.schema(RESULT_SCHEMA)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
         .parquet(path)

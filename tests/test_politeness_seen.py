@@ -9,6 +9,7 @@ from crawl4ai_spark.operators.politeness import (
     apply_host_budget,
     makespan_metrics,
     salt_hot_hosts,
+    split_per_host_budget,
     update_domain_state,
     with_host_slots,
 )
@@ -429,6 +430,34 @@ def test_salted_host_slots_conflicting_delay_rows_take_max(spark):
     assert len(out) == 40
     assert all(r["send_at_s"] == r["host_rank"] * 3.0 for r in out)
     assert any(r["host_rank"] > 0 for r in out)
+
+
+def test_per_host_budget_conflicting_rows_merge_fail_safe(spark):
+    """Conflicting budget-dim rows for one host merge to the smallest
+    budget (a NULL budget counts as the default) and the longest period,
+    never to whichever row a de-duplication happens to keep."""
+    df = spark.createDataFrame(
+        [(f"https://{h}/p{i}", h, i) for h in ("a.test", "b.test")
+         for i in range(6)],
+        "url string, host string, seq long")
+    budgets = spark.createDataFrame(
+        pd.DataFrame({"host": ["a.test", "a.test", "b.test", "b.test"],
+                      "delay_budget": [5, 1, 4, None],
+                      "delay_period": [1, 3, None, None]}),
+        "host string, delay_budget int, delay_period int")
+    within, deferred = split_per_host_budget(
+        df, budgets, ["seq"], default_budget=2)
+    got = sorted((r["host"], r["seq"]) for r in within.collect())
+    assert got == [("a.test", 0), ("b.test", 0), ("b.test", 1)]
+    assert deferred.count() == 12 - 3
+    # period 3 (the longer one): a.test fetches on one superstep in three
+    steps = [
+        step for step in range(6)
+        if split_per_host_budget(df, budgets, ["seq"], default_budget=2,
+                                 superstep=step)[0]
+        .filter(F.col("host") == "a.test").count()
+    ]
+    assert len(steps) == 2 and steps[1] - steps[0] == 3
 
 
 def test_age_priorities_breaks_starvation_in_pop_loop(spark):

@@ -2,11 +2,12 @@
 stored with every frontier row.
 
 Each Python worker invocation (one partition of one Python stage in one
-job) costs a fixed share of worker CPU whatever its row count, so the crawl
-runs Python in link discovery only: no frame the driver builds is a
+job) costs a fixed share of worker CPU whatever its row count, so a plain
+crawl runs Python in link discovery only: no frame the driver builds is a
 PythonRDD, discovery calls its UDF in one Arrow pass, the pop derives the
 fetch host in the JVM from the stored key, and ``with_global_seq`` assigns
-offsets in the JVM."""
+offsets in the JVM.  The robots gate (``check_robots_txt``) and the D2
+backoff fold (``backoff``) each add one Python stage of their own."""
 
 import importlib.util
 import os

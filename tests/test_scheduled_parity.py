@@ -17,10 +17,9 @@ from crawl4ai_spark.oracle.crawler import (
     ScheduleSpec,
     crawl_bfs_scheduled,
 )
-from crawl4ai_spark.plans.frontier import CrawlConfig, deep_crawl
+from crawl4ai_spark.plans.frontier import CrawlConfig, CrawlEngine, deep_crawl
 from crawl4ai_spark.sources.synth import (
     GraphParams,
-    gen_politeness,
     gen_robots,
     synth_local,
     url_of,
@@ -60,11 +59,8 @@ def _check(spark, world, spec, cfg, robots_pdf=None, politeness=None):
     seeds = [url_of(0, PARAMS)]
     want, want_seen = crawl_bfs_scheduled(graph, seeds, spec,
                                           robots_pdf=robots_pdf)
-    run = deep_crawl(
-        spark, seeds, pages_df, links_df, cfg, robots_pdf=robots_pdf,
-        politeness=None if politeness is None
-        else spark.createDataFrame(politeness),
-    )
+    run = CrawlEngine(spark, pages_df, links_df, cfg, robots_pdf=robots_pdf,
+                      politeness=politeness).run(seeds)
     got = _engine_rows(run)
     assert got == _oracle_rows(want)
     assert {r["url"] for r in run.seen.collect()} == want_seen
@@ -104,6 +100,10 @@ def test_backoff_retries_and_matches(spark, world):
 
 
 def test_budget_backoff_robots_combined(spark, world):
+    """Budget, backoff and robots in one crawl.  The engine is also given
+    a ``politeness`` dim whose every column raises when evaluated: no
+    superstep reads it, because politeness is the D1 budget split alone
+    and the kernel computes no per-host send slots."""
     robots = gen_robots(PARAMS)
     # make the seed's own (hot) domain disallow /dl/ so the gate provably
     # fires inside the crawl radius
@@ -115,8 +115,11 @@ def test_budget_backoff_robots_combined(spark, world):
     cfg = CrawlConfig(strategy="bfs", max_depth=2, politeness_budget=2,
                       backoff=True, max_pages=60, include_external=True,
                       check_robots_txt=True)
+    boom = F.raise_error(F.lit("politeness dim evaluated"))
+    dim = spark.range(4).select(boom.cast("string").alias("host"),
+                                boom.cast("double").alias("delay_s"))
     want, _run = _check(spark, world, spec, cfg, robots_pdf=robots,
-                        politeness=gen_politeness(PARAMS))
+                        politeness=dim)
     assert any(r["status_code"] == 403 for r in want)  # robots actually gated
 
 
@@ -125,7 +128,7 @@ def test_salting_keeps_parity(spark, world):
     spec = ScheduleSpec(strategy="bfs", max_depth=2, politeness_budget=3)
     cfg = CrawlConfig(strategy="bfs", max_depth=2, politeness_budget=3,
                       hot_host_rows=2, salt_buckets=4)
-    _check(spark, world, spec, cfg, politeness=gen_politeness(PARAMS))
+    _check(spark, world, spec, cfg)
 
 
 def test_budget_preserves_plain_coverage(spark, world):
