@@ -2,7 +2,7 @@
 
 Iceberg-shaped commit/resume semantics without the Iceberg runtime jar
 (unavailable offline — SURVEY §7 plan B): each engine table (frontier,
-seen, results, metrics, queue) writes one immutable directory per
+results, domain_state, metrics) writes one immutable directory per
 superstep; a single ``_manifest.json`` (written atomically via
 tmp+rename) is the commit point recording the latest durable superstep and
 its counters.  Resume reads the manifest, loads the committed frontier and
@@ -97,7 +97,7 @@ class SnapshotStore:
         )
 
     # ----------------------------------------------------------- compact
-    _SNAPSHOT_TABLES = frozenset({"frontier", "seen", "domain_state", "queue"})
+    _SNAPSHOT_TABLES = frozenset({"frontier", "domain_state"})
 
     def compact(self, spark: SparkSession, table: str,
                 target_bytes: int = 128 * 1024 * 1024) -> dict[str, Any]:
@@ -119,7 +119,7 @@ class SnapshotStore:
              compact dir, cleaned by the next compact's vacuum.
 
         APPEND-DELTA tables only (``results``, metrics): snapshot tables
-        (frontier/seen/domain_state), where only the LATEST superstep dir
+        (frontier/domain_state), where only the LATEST superstep dir
         is authoritative, must never be unioned — compacting one is
         rejected.  Time travel below the compaction point is given up, as
         with any vacuum; per-superstep ``partition_lineage`` for merged

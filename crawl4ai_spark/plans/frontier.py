@@ -46,11 +46,11 @@ invocation costs a fixed share of CPU whatever its row count (see
 Scale notes (the 100 TB design):
   - every per-level global ordering uses ``with_global_seq`` (range
     partition + offset assign), never a single-partition window;
-  - the seen table is append-only and anti-joined on the canonical URL
-    (hash-partitioned).  That exact left-anti join is the only URL-seen
-    check: a filter sidecar (operators/seen.py) only shrinks the candidate
-    side, while the join still scans and shuffles the whole seen table, so
-    its extra Python stages never paid on the benchmark workloads;
+  - URL-seen is the URL set of the results, never stored apart, and is
+    anti-joined on the canonical URL (hash-partitioned).  That exact
+    left-anti join is the only URL-seen check: a filter sidecar
+    (operators/seen.py) only shrinks the candidate side, while the join
+    still scans and shuffles all of seen, so its Python stages never paid;
   - the heap/stack pop is ``orderBy(...).limit(B)`` = distributed
     TakeOrdered, and queue subtraction is an anti-join on the unique queue
     key ``seq``;
@@ -69,6 +69,7 @@ from __future__ import annotations
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 from math import inf
 from typing import Any
 
@@ -77,7 +78,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..dist import empty_frame, with_global_cumsum, with_global_seq
+from ..dist import empty_frame, with_global_seq
+from ..dist import with_global_cumsum  # noqa: F401  (wrapped by perfbench/tracing.py)
 from ..functions.canonical import (
     canonical_col,  # noqa: F401  (wrapped by perfbench/tracing.py install_spans)
     fetch_key_of,
@@ -352,16 +354,6 @@ class CrawlEngine:
             .otherwise(F.coalesce(F.col("page_status"), F.lit(0))),
         ).drop("page_success", "page_status")
 
-    def _mark_seen(self, seen: DataFrame, new_urls: DataFrame) -> DataFrame:
-        """Append to the URL-seen table.  Lazy checkpoint: the union
-        materializes inside the same superstep's discovery/commit job
-        instead of paying its own job launch; its lineage is two
-        already-checkpointed inputs either way."""
-        # dedup before marking: the same URL can sit twice in one
-        # superstep (duplicate-URL quirk) — without this, every dup costs
-        # a redundant seen-table row
-        return seen.unionByName(new_urls.distinct()).localCheckpoint(eager=False)
-
     def _retry_rows(self, fetched: DataFrame, domain_state: DataFrame,
                     superstep: int, key: str) -> DataFrame:
         """D2 requeue: rate-limited rows re-enter the frontier under their
@@ -408,6 +400,7 @@ class CrawlEngine:
         est_rows: int,
         pending: DataFrame | None = None,
         reverse: bool = False,
+        filter_stats: dict | None = None,
     ) -> DataFrame:
         """link_discovery as a dataflow (bfs_strategy.py:68-139 with
         canonicalize=True; bff_strategy.py:76-125 with canonicalize=False).
@@ -417,7 +410,7 @@ class CrawlEngine:
         for best-first).  Discovered rows get dense seqs from ``base_seq``
         in (parent seq, link order); ``reverse`` hands them out backwards
         so a stack pops the first-discovered link first
-        (dfs_strategy.py:57-60).
+        (dfs_strategy.py:57-60).  ``filter_stats`` gets the filter counts.
         """
         cfg = self.cfg
         src = fetched.filter(F.col("success")).select(
@@ -456,7 +449,7 @@ class CrawlEngine:
             F.col("__jc.key").alias("push_key"),
         ).drop("__jc").filter(F.col("abs_href").isNotNull())
         # P1 validity + P2 filter chain — on the absolute href (bfs :109)
-        if cfg.collect_filter_stats:
+        if filter_stats is not None:
             passed_expr = url_validity(F.col("abs_href"))
             if cfg.filters:
                 passed_expr = passed_expr & chain_column(F.col("abs_href"), cfg.filters)
@@ -464,13 +457,9 @@ class CrawlEngine:
                 F.count("*").alias("candidates"),
                 F.sum(passed_expr.cast("long")).alias("passed"),
             ).collect()[0]
-            self._log(
-                filter_stats={
-                    "candidates": stats["candidates"],
-                    "passed": int(stats["passed"] or 0),
-                    "rejected": stats["candidates"] - int(stats["passed"] or 0),
-                }
-            )
+            passed = int(stats["passed"] or 0)
+            filter_stats.update(candidates=stats["candidates"], passed=passed,
+                                rejected=stats["candidates"] - passed)
         cand = cand.filter(url_validity(F.col("abs_href")))
         if cfg.filters:
             cand = cand.filter(chain_column(F.col("abs_href"), cfg.filters))
@@ -483,10 +472,10 @@ class CrawlEngine:
             # (bfs_strategy.py:116-119; applies even with no scorer, score=0)
             cand = cand.filter(F.col("score") >= F.lit(cfg.score_threshold))
         # URL-seen (T6): one exact left_anti join on the canonical URL
-        # against the seen state as of superstep start.  No filter sidecar
-        # guards it: a candidate-side prefilter would still leave this join
-        # scanning and shuffling the whole seen table, so it only adds
-        # Python stages (operators/seen.py keeps the filters standalone).
+        # against the seen set, this superstep's fetches included.  No
+        # filter sidecar guards it: a candidate-side prefilter would still
+        # leave this join scanning and shuffling the whole seen set, so it
+        # only adds Python stages (operators/seen.py keeps them standalone).
         seen_t = seen.select(F.col("url").alias("target"))
         cand = cand.join(seen_t, on="target", how="left_anti")
         if pending is not None:
@@ -531,6 +520,7 @@ class CrawlEngine:
         """Load the last committed snapshot (north_rule checkpoint/resume):
         manifest → superstep + counters; orphan dirs from a crashed
         superstep are deleted; returns None when nothing was committed.
+        URL-seen is not restored: the kernel derives it from the result parts.
         A manifest without the kernel's counters, or a frontier without
         ``fetch_key``, raises ValueError."""
         if self.store is None:
@@ -550,7 +540,6 @@ class CrawlEngine:
             raise ValueError(
                 f"snapshot {s} predates the stored fetch key: its frontier "
                 "lacks the fetch_key column")
-        seen = self.store.read_one(self.spark, "seen", s)
         parts = []
         start = 0
         comp = self.store.read_compacted(self.spark, "results")
@@ -570,7 +559,6 @@ class CrawlEngine:
         return {
             "superstep": s + 1,
             "frontier": frontier,
-            "seen": seen,
             "result_parts": parts,
             "counters": counters,
             "domain_state": domain_state,  # DataFrame (never driver pandas)
@@ -601,7 +589,6 @@ class CrawlEngine:
         return {
             "superstep": 0,
             "frontier": frontier,
-            "seen": empty_frame(self.spark, "url string"),
             "result_parts": [],
             "counters": {"pages_crawled": 0, "enq_base": n, "result_base": 0},
             "domain_state": empty_domain_state_df(self.spark),
@@ -643,13 +630,15 @@ class CrawlEngine:
             eligible fast-forward;
           - visited marks at fetch time (failures included,
             bfs_strategy.py:161), once per URL: a retry's URL is already
-            marked from its first attempt.
+            marked from its first attempt.  So URL-seen is the URL set of
+            the results.
         """
         cfg = self.cfg
         self._compiled = self._codegen_count()
         st = (self._restore() if resume else None) or self._fresh(pop, seeds)
-        frontier, seen = st["frontier"], st["seen"]
-        superstep, result_parts = st["superstep"], st["result_parts"]
+        frontier, result_parts = st["frontier"], st["result_parts"]
+        seen = self._union(result_parts).select("url")
+        superstep = st["superstep"]
         domain_state = st["domain_state"]
         pages_crawled = st["counters"]["pages_crawled"]
         enq_base = st["counters"]["enq_base"]
@@ -706,14 +695,8 @@ class CrawlEngine:
                     salt_buckets=cfg.salt_buckets, url_col="url",
                 )
                 deferred = deferred.select(*FRONTIER_COLS)
-                marked = within
             else:
-                within, deferred, marked = prep, None, batch
-            # T6: mark visited BEFORE fetch (bfs_strategy.py:161) — the
-            # URL-seen set includes failed fetches; budget-deferred rows
-            # are not seen until actually fetched.
-            seen = self._mark_seen(
-                seen, marked.filter(F.col("attempt") == 0).select("url"))
+                within, deferred = prep, None
             if pop.kind != "level":
                 # results are numbered densely in pop order; the queue
                 # key rides along as qseq for the retry requeue
@@ -736,6 +719,13 @@ class CrawlEngine:
                 F.min(F.when(F.col("success"), F.col("depth"))).alias("dmin"),
             ).collect()[0]
             t_fetch = time.time()
+            # T6: mark what was fetched, failures included (bfs :161).  No
+            # dedup: seen only feeds left-anti joins, and a distinct would
+            # cost a shuffle job per superstep.  Lazy checkpoint,
+            # materialized by discovery.
+            seen = seen.unionByName(
+                fetched.filter(F.col("attempt") == 0).select("url")
+            ).localCheckpoint(eager=False)
             n_within = int(stat["n"])
             n_success = int(stat["ok"] or 0)
             min_succ_depth = stat["dmin"]
@@ -769,6 +759,8 @@ class CrawlEngine:
                 if part is not None:
                     part = part.select(*FRONTIER_COLS)
                     carried = part if carried is None else carried.unionByName(part)
+            filter_stats = (dict(candidates=0, passed=0, rejected=0)
+                            if cfg.collect_filter_stats else None)
             remaining = cfg.page_budget - pages_crawled
             # best-first counts pages as they land (bff :146-149): the
             # batch's i-th success leaves budget - (pages_before + i)
@@ -779,11 +771,12 @@ class CrawlEngine:
                 and int(min_succ_depth) + 1 <= cfg.max_depth
             ):
                 if pop.kind == "heap":
-                    # two-pass distributed cumsum, NOT Window.orderBy("seq")
-                    # — an unpartitioned window funnels the whole batch
-                    # through one task
-                    src = with_global_cumsum(
-                        fetched, ["seq"], "success", out_col="cum_succ",
+                    # each success's 1-based rank in seq order, NOT by
+                    # Window.orderBy("seq") — an unpartitioned window
+                    # funnels the whole batch through one task
+                    src = with_global_seq(
+                        fetched.filter(F.col("success")), ["seq"],
+                        out_col="cum_succ", start=1,
                         num_partitions=self._parts(pop.k),
                     )
                     cap = F.lit(cfg.page_budget - pages_before) - F.col("cum_succ")
@@ -796,7 +789,7 @@ class CrawlEngine:
                     # heap/stack: queued duplicates are consumed by the
                     # visited check at pop, as in the reference
                     pending=carried if pop.kind == "level" else None,
-                    reverse=pop.kind == "stack",
+                    reverse=pop.kind == "stack", filter_stats=filter_stats,
                 ).withColumn("attempt", F.lit(0)).withColumn(
                     "ready", F.lit(0).cast("long")
                 ).select(*FRONTIER_COLS)
@@ -823,8 +816,9 @@ class CrawlEngine:
                     "discover": int((t_disc - t_fetch) * 1000),
                     "results_wait": int((t_results - t_disc) * 1000),
                 },
+                **({} if filter_stats is None else {"filter_stats": filter_stats}),
             )
-            self._commit(superstep, frontier=nxt, seen=seen,
+            self._commit(superstep, frontier=nxt,
                          counters={"pages_crawled": pages_crawled,
                                    "enq_base": enq_base,
                                    "result_base": result_base},
@@ -836,7 +830,7 @@ class CrawlEngine:
             n_frontier, _, n_elig, min_ready = stat
             superstep += 1
         return self._finish(
-            result_parts, seen, pages_crawled,
+            result_parts, pages_crawled,
             order=["superstep", "depth", "seq"] if pop.kind == "level" else ["seq"],
         )
 
@@ -849,12 +843,11 @@ class CrawlEngine:
             return self.store.read_one(self.spark, "results", superstep)
         return results_s.localCheckpoint(eager=True)
 
-    def _commit(self, superstep: int, frontier: DataFrame, seen: DataFrame,
-                counters: dict, domain_state: DataFrame | None = None) -> None:
+    def _commit(self, superstep: int, frontier: DataFrame, counters: dict,
+                domain_state: DataFrame | None = None) -> None:
         if self.store is None:
             return
         self.store.write("frontier", frontier, superstep)
-        self.store.write("seen", seen, superstep)
         if domain_state is not None:
             self.store.write("domain_state", domain_state, superstep)
         if self.metrics:
@@ -863,7 +856,7 @@ class CrawlEngine:
             entry = dict(self.metrics[-1])
             entry["lineage"] = {
                 t: self.store.partition_lineage(t, superstep)
-                for t in ("results", "frontier", "seen")
+                for t in ("results", "frontier")
             }
             self.store.write_json("metrics", superstep, entry)
         self.store.commit(superstep, counters)
@@ -884,14 +877,15 @@ class CrawlEngine:
         self._compiled = n
         self.metrics.append(kw)
 
-    def _finish(self, parts: list[DataFrame], seen: DataFrame,
-                pages_crawled: int, order: list[str]) -> CrawlRun:
-        if parts:
-            results = parts[0]
-            for p in parts[1:]:
-                results = results.unionByName(p)
-        else:
-            results = empty_frame(self.spark, RESULT_SCHEMA)
+    def _union(self, parts: list[DataFrame]) -> DataFrame:
+        if not parts:
+            return empty_frame(self.spark, RESULT_SCHEMA)
+        return reduce(DataFrame.unionByName, parts)
+
+    def _finish(self, parts: list[DataFrame], pages_crawled: int,
+                order: list[str]) -> CrawlRun:
+        results = self._union(parts)
+        seen = results.select("url").distinct()
         if self.cfg.fetch_ssl_certificate:
             from ..operators.sslcert import ssl_certificate_stage
             from ..sources.sslsynth import host_certs_df

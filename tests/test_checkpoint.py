@@ -10,7 +10,12 @@ import pytest
 
 from crawl4ai_spark.plans.checkpoint import SnapshotStore
 from crawl4ai_spark.plans.frontier import CrawlConfig, CrawlEngine
-from crawl4ai_spark.sources.synth import GraphParams, synth_local, url_of
+from crawl4ai_spark.sources.synth import (
+    GraphParams,
+    gen_robots,
+    synth_local,
+    url_of,
+)
 
 PARAMS = GraphParams(n_pages=50, n_domains=4, mean_degree=5)
 
@@ -104,7 +109,7 @@ def test_every_strategy_resumes_from_every_superstep(
             rec = json.load(f)
         assert rec["codegen_compiles"] >= 0
         lin = rec["lineage"]
-        for table in ("results", "frontier", "seen"):
+        for table in ("results", "frontier"):
             snap = store.read_one(spark, table, s)
             assert sum(p["rows"] for p in lin[table]) == snap.count()
             assert all(p["bytes"] > 0 and p["file"].endswith(".parquet")
@@ -118,6 +123,35 @@ def test_every_strategy_resumes_from_every_superstep(
     assert store.last_commit()["superstep"] == steps[0]
     assert store.read_one(spark, "results", steps[1]) is not None
     assert _rows(engine(store).run(seeds, resume=True)) == want
+
+
+@pytest.mark.parametrize("strategy", list(RESUME_CASES))
+def test_url_seen_is_the_url_set_of_the_results(
+        spark, resume_tables, tmp_path, strategy):
+    """The reference marks a URL visited when it fetches it, failures
+    included (bfs_strategy.py:161), so URL-seen is exactly the URL set of
+    the results, and a store keeps no seen table.  Here robots denies some
+    fetches (403); where a strategy schedules, the budget defers some rows
+    and backoff retries some."""
+    pages_df, links_df = resume_tables
+    robots = gen_robots(RESUME_PARAMS)
+    robots.loc[robots.host == "ex0.test", "rules"] = (
+        "User-agent: *\nDisallow: /img/\n")
+    cfg = CrawlConfig(strategy=strategy, check_robots_txt=True,
+                      **RESUME_CASES[strategy])
+    store = SnapshotStore(str(tmp_path / "store"))
+    run = CrawlEngine(spark, pages_df, links_df, cfg, robots_pdf=robots,
+                      store=store).run([url_of(0, RESUME_PARAMS)])
+    rows = run.results.collect()
+    assert any(r["status_code"] == 403 for r in rows)
+    if strategy in ("bfs", "best_first"):
+        assert any(m["deferred"] for m in run.metrics)
+        assert any(r["attempt"] > 0 for r in rows)
+    seen = [r["url"] for r in run.seen.collect()]
+    assert len(seen) == len(set(seen))
+    assert set(seen) == {r["url"] for r in rows}
+    assert store.last_commit() is not None
+    assert not os.path.exists(os.path.join(store.root, "seen"))
 
 
 @pytest.mark.parametrize("counter", ["enq_base", "result_base"])

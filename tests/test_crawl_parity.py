@@ -6,6 +6,8 @@ The oracle executes the reference algorithms verbatim
 the Spark engine must reproduce result sequences (url, depth, parent)
 exactly and, for best-first, the popped scores too."""
 
+import itertools
+
 import pytest
 
 from crawl4ai_spark.functions.filters import FilterSpec
@@ -192,16 +194,47 @@ METRIC_KEYS = {
 
 
 def test_every_strategy_logs_one_metrics_schema(spark, spark_tables):
+    """One record per superstep; with ``collect_filter_stats`` the filter
+    counts ride in that record (zeros where nothing was discovered)."""
     pages_df, links_df = spark_tables
-    for strategy in ("bfs", "best_first", "dfs", "dfs_batched"):
+    for strategy, filter_stats in itertools.product(
+            ("bfs", "best_first", "dfs", "dfs_batched"), (False, True)):
+        keys = METRIC_KEYS | ({"filter_stats"} if filter_stats else set())
         cfg = CrawlConfig(strategy=strategy, max_depth=1, max_pages=4,
-                          batch_size=3)
+                          batch_size=3, collect_filter_stats=filter_stats)
         run = deep_crawl(spark, [url_of(0, PARAMS)], pages_df, links_df, cfg)
         assert run.metrics, strategy
+        assert [m["superstep"] for m in run.metrics] == list(
+            range(len(run.metrics))), strategy
         for m in run.metrics:
-            assert set(m) == METRIC_KEYS, (strategy, sorted(m))
+            assert set(m) == keys, (strategy, sorted(m))
             assert set(m["phase_ms"]) == {
                 "split", "fetch", "discover", "results_wait"}, strategy
+        if filter_stats:
+            stats = [m["filter_stats"] for m in run.metrics]
+            assert stats[0]["candidates"] > 0, strategy
+            assert all(s["candidates"] == s["passed"] + s["rejected"]
+                       for s in stats), strategy
+
+
+def test_best_first_capacity_runs_no_python_cumsum(
+        spark, spark_tables, oracle_graph, monkeypatch):
+    """Best-first's per-success remaining capacity is each success's rank
+    in seq order, a JVM global rank: the Arrow cumsum is never called."""
+    import crawl4ai_spark.plans.frontier as frontier
+
+    def boom(*a, **k):
+        raise AssertionError("with_global_cumsum called")
+
+    monkeypatch.setattr(frontier, "with_global_cumsum", boom)
+    pages_df, links_df = spark_tables
+    _, spec, config = next(c for c in CASES if c[0] == "bff_plain")
+    want, want_seen = crawl(oracle_graph, url_of(0, PARAMS), spec)
+    run = deep_crawl(spark, [url_of(0, PARAMS)], pages_df, links_df, config)
+    assert [(r["url"], r["depth"], r["parent"], r["success"])
+            for r in run.results.collect()] == [
+        (r.url, r.depth, r.parent, r.success) for r in want]
+    assert {r["url"] for r in run.seen.collect()} == want_seen
 
 
 def test_a_repeated_crawl_compiles_no_classes(spark, spark_tables):

@@ -73,7 +73,7 @@ def test_driver_built_frames_are_jvm_local(spark, tables):
     seeds = [url_of(i, PARAMS) for i in range(3)] + ["HTTP://Ex.COM/a/b/a;/"]
     for kind in ("level", "stack"):
         st_ = engine._fresh(PopPolicy(kind), seeds)
-        for name in ("frontier", "seen", "domain_state"):
+        for name in ("frontier", "domain_state"):
             assert not _python_rdd(st_[name]), (kind, name)
         rows = st_["frontier"].orderBy("seq").collect()
         order = seeds[::-1] if kind == "stack" else seeds
@@ -83,8 +83,11 @@ def test_driver_built_frames_are_jvm_local(spark, tables):
     empty = engine._fresh(PopPolicy("level"), [])
     assert not _python_rdd(empty["frontier"]) and empty["frontier"].count() == 0
     assert not _python_rdd(empty_domain_state_df(spark))
-    done = engine._finish([], empty["seen"], 0, order=["seq"])
+    # a fresh crawl's seen frame is the URL column of no results
+    assert not _python_rdd(engine._union(empty["result_parts"]).select("url"))
+    done = engine._finish([], 0, order=["seq"])
     assert not _python_rdd(done.results) and done.results.count() == 0
+    assert not _python_rdd(done.seen) and done.seen.count() == 0
     # the robots rules table, from pandas with an all-null rules column
     rules = pd.DataFrame({"host": ["a.test", "b.test"], "rules": [None, None],
                           "fetch_time": [1, 2], "status": [599, 404]})
@@ -136,7 +139,7 @@ def test_discovery_runs_one_python_operator(spark, monkeypatch, canonicalize):
         return df.withColumn(out_col, F.lit(start).cast("long"))
 
     monkeypatch.setattr(frontier_mod, "with_global_seq", capture)
-    engine._discover(fetched, engine._fresh(PopPolicy("level"), [])["seen"],
+    engine._discover(fetched, engine._union([]).select("url"),
                      F.lit(100), canonicalize=canonicalize, base_seq=0,
                      est_rows=10)
     pushed = captured[0]
