@@ -82,9 +82,7 @@ def apply_host_budget(df: DataFrame, budget: int | None,
 
 def split_host_budget(df: DataFrame, budget: int, order_cols: list,
                       host_col: str = "host",
-                      hot_hosts: list[str] | None = None,
-                      salt_buckets: int = 16,
-                      url_col: str = "url") -> tuple[DataFrame, DataFrame]:
+                      part_col: str = "host_part") -> tuple[DataFrame, DataFrame]:
     """Exact (within, deferred) split for the engine superstep: ``within`` =
     the first ``budget`` rows per host in ``order_cols`` order; ``deferred``
     = the rest, untouched, to re-enter the next superstep's frontier
@@ -92,42 +90,25 @@ def split_host_budget(df: DataFrame, budget: int, order_cols: list,
     async_dispatcher.py:44-65 — the batch translation defers the overflow
     to the next politeness window instead of sleeping).
 
-    Hot hosts (D7) rank in two phases so no task ever orders a whole hot
-    host: a per-(host, salt-bucket) local window keeps each bucket's first
-    ``budget`` rows (a row past local rank B is past global rank B a
-    fortiori), then one exact window over the ≤ salt_buckets × budget
-    survivors.  The result is EXACTLY the unsalted split — salting here is
+    One window ranks each ``part_col`` key, the D7 partition key of
+    ``salt_hot_hosts``.  An unsalted host's key is the host itself, so its
+    rank is already exact, and with ``part_col == host_col`` (no host
+    salted) that window is the whole split.  A salted host is ranked per
+    salted sub-key first, so no task orders a whole hot host; a row past
+    sub-key rank ``budget`` is past host rank ``budget`` a fortiori, and
+    one more window re-ranks the ≤ buckets × ``budget`` salted survivors
+    per host.  The result is EXACTLY the unsalted split — salting here is
     an execution detail, never a semantics change.
     """
-    hot = [h for h in (hot_hosts or []) if h]
-    if not hot or salt_buckets <= 1:
-        w = Window.partitionBy(host_col).orderBy(*order_cols)
-        r = df.withColumn("__rn", F.row_number().over(w))
-        return (
-            r.filter(F.col("__rn") <= budget).drop("__rn"),
-            r.filter(F.col("__rn") > budget).drop("__rn"),
-        )
-    is_hot = F.col(host_col).isin(hot)
-    cold = df.filter(~is_hot)
-    wcold = Window.partitionBy(host_col).orderBy(*order_cols)
-    rc = cold.withColumn("__rn", F.row_number().over(wcold))
-    cold_within = rc.filter(F.col("__rn") <= budget).drop("__rn")
-    cold_defer = rc.filter(F.col("__rn") > budget).drop("__rn")
-
-    salt = F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt_buckets)).cast("int")
-    h1 = df.filter(is_hot).withColumn("__salt", salt)
-    w1 = Window.partitionBy(host_col, "__salt").orderBy(*order_cols)
-    h1 = h1.withColumn("__lrn", F.row_number().over(w1))
-    hot_defer_far = h1.filter(F.col("__lrn") > budget).drop("__salt", "__lrn")
-    survivors = h1.filter(F.col("__lrn") <= budget).drop("__salt", "__lrn")
-    w2 = Window.partitionBy(host_col).orderBy(*order_cols)
-    r2 = survivors.withColumn("__rn", F.row_number().over(w2))
-    hot_within = r2.filter(F.col("__rn") <= budget).drop("__rn")
-    hot_defer_near = r2.filter(F.col("__rn") > budget).drop("__rn")
-    return (
-        cold_within.unionByName(hot_within),
-        cold_defer.unionByName(hot_defer_far).unionByName(hot_defer_near),
-    )
+    rn = F.col("__rn")
+    r = df.withColumn("__rn", F.row_number().over(
+        Window.partitionBy(part_col).orderBy(*order_cols)))
+    if part_col != host_col:
+        near = ~F.col(part_col).eqNullSafe(F.col(host_col)) & (rn <= budget)
+        r = r.filter(~near).unionByName(r.filter(near).withColumn(
+            "__rn", F.row_number().over(
+                Window.partitionBy(host_col).orderBy(*order_cols))))
+    return r.filter(rn <= budget).drop("__rn"), r.filter(rn > budget).drop("__rn")
 
 
 def split_per_host_budget(df: DataFrame, budgets: DataFrame,
@@ -157,9 +138,8 @@ def split_per_host_budget(df: DataFrame, budgets: DataFrame,
     The dimension is merged to one row per host and broadcast, so this adds
     no shuffle beyond the same per-host rank window the global split pays.
     Conflicting rows merge fail-safe: the smallest budget (a NULL budget
-    counts as ``default_budget``) and the longest period;
-    for hot hosts compose with the two-phase salted ranking exactly as
-    ``split_host_budget`` does (a per-host cap only tightens it)."""
+    counts as ``default_budget``) and the longest period.  It ranks
+    per host: it takes no salted partition key."""
     has_period = superstep is not None and period_col in budgets.columns
     default = F.lit(default_budget).cast("int")
     merged = [F.min(F.coalesce(F.col(budget_col).cast("int"), default))
@@ -354,8 +334,9 @@ def salt_hot_hosts(df: DataFrame, hot_hosts: list[str], buckets: int,
                    url_col: str = "url", host_col: str = "host") -> DataFrame:
     """D7 skew salting: partition-key column ``host_part`` = host, except
     hot hosts fan out to `buckets` salted sub-keys via pmod(xxhash64(url), S).
-    Politeness budgets are computed per *host* before salting, so
-    correctness is unaffected; this only breaks up hot-host stragglers."""
+    ``split_host_budget`` ranks on this key and re-ranks salted survivors
+    per host, so budgets stay exact; this only breaks up hot-host
+    stragglers."""
     if not hot_hosts or buckets <= 1:
         return df.withColumn("host_part", F.col(host_col))
     salt = F.pmod(F.xxhash64(F.col(url_col)), F.lit(buckets)).cast("string")

@@ -83,15 +83,18 @@ def robots_gate_df(df: DataFrame, rules_df: DataFrame | None,
     defaults False, async_configs.py:713) and every row is allowed.  The
     table is broadcast and left-joined on host, and one Arrow pass parses
     each batch's rules with a per-host memo — the frontier arrives
-    host-partitioned, so each task touches few distinct hosts."""
+    host-partitioned, so each task touches few distinct hosts.  A host
+    with more than one rules row raises."""
     if rules_df is None:
         return df.withColumn("robots_allowed", F.lit(True))
-    # one row per host, or the left join would duplicate frontier rows
-    r = F.broadcast(rules_df.select(
-        F.col("host").alias("__r_host"),
-        F.col("rules").alias("__r_rules"),
-        F.col("status").alias("__r_status"),
-    ).dropDuplicates(["__r_host"]))
+    # one row per host, or the left join would duplicate frontier rows; no
+    # row order picks between two, so the broadcast build side raises
+    r = F.broadcast(rules_df.groupBy(F.col("host").alias("__r_host")).agg(
+        F.when(F.count("*") == 1, F.first("rules")).otherwise(F.raise_error(
+            F.concat(F.lit("robots rules: more than one row for host "),
+                     F.first("host")))).alias("__r_rules"),
+        F.first("status").alias("__r_status"),
+    ))
     j = df.join(r, df[host_col] == r["__r_host"], "left").drop("__r_host")
     fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields

@@ -479,9 +479,14 @@ def robots_allower(robots_pdf, user_agent: str = "*", now: int = 1_700_000_000):
     status / missing body ⇒ allow-all, :304-315); the stdlib
     RobotFileParser over those rules, which applies the first rule line
     that matches, in file order (not the longest match); every
-    parse/evaluate failure allows."""
+    parse/evaluate failure allows.  A host with more than one rules row
+    raises ValueError, as the engine's gate does."""
     from urllib.robotparser import RobotFileParser
 
+    dup = robots_pdf.host[robots_pdf.host.duplicated()]
+    if len(dup):
+        raise ValueError(
+            f"robots rules: more than one row for host {dup.iloc[0]}")
     rules_by_host = {
         r.host: (r.rules if int(r.status) == 200 and r.rules else None)
         for r in robots_pdf.itertuples()

@@ -57,11 +57,14 @@ Scale notes (the 100 TB design):
   - fetch joins are hash joins on the canonical fetch key; the pages/links
     tables would be Iceberg-bucketed by that key in production so the join
     co-locates without shuffle;
-  - the D1 budget split and hot-host salting run before the fetch join
-    (operators/politeness.py); salting changes execution, never crawl
-    semantics.  Politeness is the budget split alone: virtual send slots
-    (``with_host_slots``) would be read by no result, metric or retry, so
-    the kernel does not compute them.
+  - a superstep shuffles its batch on host once.  ``_prepare`` adds the
+    D7 ``host_part`` key without a shuffle; the D1 budget split's rank
+    window on it is that shuffle (the eager checkpoint before the split
+    reports no partitioning, so an earlier repartition would be shuffled
+    again), and without a budget the kernel hash-partitions on it.
+    Salting changes execution, never crawl semantics.  Politeness is the
+    budget split alone: virtual send slots (``with_host_slots``) would be
+    read by no result, metric or retry, so the kernel does not compute them.
 """
 
 from __future__ import annotations
@@ -295,41 +298,28 @@ class CrawlEngine:
         return max(1, min(cap, -(-n_rows // _ROWS_PER_TASK)))
 
     # ------------------------------------------------------------ fetch
-    def _hot_hosts(self, frontier: DataFrame, n_rows: int) -> list[str]:
-        """D7: hosts whose frontier share this superstep exceeds
-        ``hot_host_rows`` (top 64).  Detection reads the raw url host
-        JVM-side (no Arrow pass) and is skipped entirely for small
-        supersteps, where no single task can straggle anyway."""
+    def _prepare(self, frontier: DataFrame,
+                 n_rows: int) -> tuple[DataFrame, list[str]]:
+        """The D7 decision, made once per superstep and without a shuffle:
+        ``host`` of the stored fetch key (Catalyst), the hot hosts on that
+        column, and the ``host_part`` partition key from
+        ``salt_hot_hosts``.  A hot host has more than ``hot_host_rows``
+        rows (top 64); detection is skipped for batches under twice that,
+        where no single task can straggle anyway.  Returns the frame and
+        the hot hosts."""
         cfg = self.cfg
-        if n_rows < cfg.hot_host_rows * 2:
-            return []
-        rows = (
-            frontier.groupBy(F.lower(host_of(F.col("url"))).alias("h"))
-            .count()
-            .filter(F.col("count") > cfg.hot_host_rows)
-            .orderBy(F.col("count").desc())
-            .limit(64)
-            .collect()
-        )
-        return [r["h"] for r in rows if r["h"]]
-
-    def _prepare(self, frontier: DataFrame, n_rows: int,
-                 hot_hosts: list[str]) -> DataFrame:
-        """Host of the stored fetch key (Catalyst), partitioned for the
-        fetch stage."""
         f = frontier.withColumn("host", F.lower(host_of(F.col("fetch_key"))))
-        # Hash-partition on host, sized to the batch: (a) sizes the robots
-        # gate's Arrow stage to the batch (each of its partitions is one
-        # Python worker invocation per job); (b) co-partitions for the
-        # robots memo and the D1 budget split's rank window
-        # (Window.partitionBy(host) reuses this exchange — no extra
-        # shuffle); (c) hot hosts fan out over salted sub-keys so one
-        # domain can never pin a whole task (D7).
-        if hot_hosts:
-            f = salt_hot_hosts(f, hot_hosts, self.cfg.salt_buckets,
-                               url_col="url")
-            return f.repartition(self._parts(n_rows), "host_part").drop("host_part")
-        return f.repartition(self._parts(n_rows), "host")
+        hot = []
+        if n_rows >= cfg.hot_host_rows * 2:
+            rows = (
+                f.groupBy("host").count()
+                .filter(F.col("count") > cfg.hot_host_rows)
+                .orderBy(F.col("count").desc())
+                .limit(64)
+                .collect()
+            )
+            hot = [r["host"] for r in rows if r["host"]]
+        return salt_hot_hosts(f, hot, cfg.salt_buckets), hot
 
     def _fetch(self, f: DataFrame) -> DataFrame:
         """S2/P8: robots gate → synthetic fetch join, over the rows the D1
@@ -686,17 +676,20 @@ class CrawlEngine:
                     Window.partitionBy("url").orderBy(*order))
                 ).filter(F.col("__r") == 1).drop("__r")
                 n_rows = pop.k
-            hot = self._hot_hosts(batch, n_rows)
-            prep = self._prepare(batch, n_rows, hot)
+            prep, hot = self._prepare(batch, n_rows)
             if budget is not None:
-                prep = prep.localCheckpoint(eager=True)
+                # the batch is computed once for both halves; the split's
+                # rank window is the host shuffle (module docstring)
                 within, deferred = split_host_budget(
-                    prep, budget, order, hot_hosts=hot,
-                    salt_buckets=cfg.salt_buckets, url_col="url",
-                )
+                    prep.localCheckpoint(eager=True), budget, order,
+                    part_col="host_part" if hot else "host")
                 deferred = deferred.select(*FRONTIER_COLS)
             else:
-                within, deferred = prep, None
+                # sized to the batch: each partition of the robots gate's
+                # Arrow stage is one Python worker invocation per job
+                within = prep.repartition(self._parts(n_rows), "host_part")
+                deferred = None
+            within = within.drop("host_part")
             if pop.kind != "level":
                 # results are numbered densely in pop order; the queue
                 # key rides along as qseq for the retry requeue

@@ -32,6 +32,11 @@ best-first crawl.  Measured on a 4-vCPU VM:
     the largest crawl entry) cost 107-115 KB of heap and 26-33 KB of
     Metaspace apiece, so a full cache of 1000 holds at most about 150 MB.
 
+Whole-stage classes are named without their codegen stage id
+(``spark.sql.codegen.useIdInClassName=false``): AQE numbers the stages
+differently from run to run, and a class whose source differs only in that
+id would miss the cache and compile again.
+
 ``CrawlEngine`` logs the compiles of every superstep as
 ``codegen_compiles``; a repeated crawl reads 0.
 """
@@ -74,6 +79,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -157,18 +157,35 @@ def test_filter_stats_collection(spark):
     )
 
 
+def _exchanges(df) -> int:
+    """Shuffle exchanges in ``df``'s executed (AQE final) plan; a reused
+    exchange is not a second shuffle."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    return sum(1 for line in plan.splitlines()
+               if "Exchange hashpartitioning" in line and "ReusedExchange" not in line)
+
+
 def test_split_host_budget_salted_exact(spark):
-    # the two-phase hot-host split must equal the unsalted split EXACTLY
+    # the salted split must equal the unsalted split EXACTLY.  The input is
+    # eagerly checkpointed, as the kernel splits it: a checkpoint reports
+    # no partitioning, so each rank window shuffles once — one window
+    # unsalted, and the salted survivors' re-rank per host adds one
     from crawl4ai_spark.operators.politeness import split_host_budget
 
     rows = [
         (f"https://h{i % 3}.test/p{i}", f"h{i % 3}.test", i % 4, i)
         for i in range(200)
     ]
-    df = spark.createDataFrame(rows, "url string, host string, depth int, seq long")
-    w0, d0 = split_host_budget(df, 7, ["depth", "seq"])
-    w1, d1 = split_host_budget(df, 7, ["depth", "seq"],
-                               hot_hosts=["h0.test"], salt_buckets=4)
+    df = spark.createDataFrame(
+        rows, "url string, host string, depth int, seq long"
+    ).localCheckpoint(eager=True)
+    w0, d0 = split_host_budget(df, 7, ["depth", "seq"], part_col="host")
+    salted = salt_hot_hosts(df, hot_hosts=["h0.test"], buckets=4)
+    assert salted.filter(F.col("host_part") != F.col("host")).count() == 67
+    w1, d1 = split_host_budget(salted, 7, ["depth", "seq"])
+    assert (_exchanges(w0), _exchanges(w1)) == (1, 2)
     key = lambda x: sorted((r["url"], r["seq"]) for r in x.collect())
     assert key(w0) == key(w1)
     assert key(d0) == key(d1)

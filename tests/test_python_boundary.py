@@ -98,17 +98,23 @@ def test_driver_built_frames_are_jvm_local(spark, tables):
 
 
 def test_prepare_runs_no_python(spark, tables):
-    engine = _engine(spark, tables)
-    seeds = [url_of(i, PARAMS) for i in range(6)]
-    frontier = engine._fresh(PopPolicy("level"), seeds)["frontier"]
-    hot = frontier.select(F.lower(F.regexp_extract(
-        "url", r"://([^/]+)", 1))).first()[0]
-    for hot_hosts in ([], [hot]):
-        prep = engine._prepare(frontier, len(seeds), hot_hosts)
-        assert _python_ops(prep) == [], hot_hosts
-        got = {r["url"]: r["host"] for r in prep.collect()}
-        assert got == {u: normalize_url_for_deep_crawl(u, u).split("/")[2]
-                       for u in seeds}
+    # seven path-less URLs of one host: the raw URL's host reads
+    # "h.test?x=N", one row each, while the fetch-key host is h.test for
+    # all seven, so h.test is hot at more than six rows
+    seeds = [url_of(i, PARAMS) for i in range(6)] + [
+        f"http://h.test?x={i}" for i in range(7)]
+    for hot_host_rows, want in ((100_000, []), (6, ["h.test"])):
+        engine = _engine(spark, tables, hot_host_rows=hot_host_rows,
+                         salt_buckets=4)
+        frontier = engine._fresh(PopPolicy("level"), seeds)["frontier"]
+        prep, hot = engine._prepare(frontier, len(seeds))
+        assert hot == want
+        assert _python_ops(prep) == [], want
+        rows = prep.collect()
+        assert {r["url"]: r["host"] for r in rows} == {
+            u: normalize_url_for_deep_crawl(u, u).split("/")[2] for u in seeds}
+        salted = {r["host_part"] for r in rows if r["host_part"] != r["host"]}
+        assert {p.split("#")[0] for p in salted} == set(want)
 
 
 # relative hrefs whose canonical URL is not a fixed point of the

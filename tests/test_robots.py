@@ -5,6 +5,7 @@ fetch-error → allow; the engine turns a disallow into a 403 non-success
 result without fetching (async_webcrawler.py:361-370)."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from crawl4ai_spark.operators.robots import RULES_SCHEMA, allowed_for, robots_gate_df
@@ -116,6 +117,32 @@ def test_robots_gate_df_matches_dict_gate(spark):
     assert got == want
     assert got["https://norules.test/a"] is True
     assert not all(want.values())  # some URL is actually denied
+
+
+@pytest.mark.parametrize("rows", ["clean", "deny_first", "deny_last"])
+def test_two_rules_rows_for_one_host_raise(spark, rows):
+    # (200, Disallow: /) and (404, no rules) for one host: a gate that kept
+    # the first row would deny, an oracle that kept the last would allow,
+    # and the answer would flip with the row order.  Both raise instead.
+    from crawl4ai_spark.oracle.crawler import robots_allower
+
+    deny = ("h.test", "User-agent: *\nDisallow: /\n", 1_700_000_000, 200)
+    gone = ("h.test", None, 1_700_000_000, 404)
+    table = {"clean": [deny], "deny_first": [deny, gone],
+             "deny_last": [gone, deny]}[rows]
+    pdf = pd.DataFrame(table, columns=["host", "rules", "fetch_time", "status"])
+    gate = robots_gate_df(
+        spark.createDataFrame([("https://h.test/a", "h.test")],
+                              "fetch_key string, host string"),
+        spark.createDataFrame(pdf, RULES_SCHEMA))
+    if rows == "clean":
+        assert [r["robots_allowed"] for r in gate.collect()] == [False]
+        assert robots_allower(pdf)("h.test", "https://h.test/a") is False
+        return
+    with pytest.raises(Exception, match="more than one row for host h.test"):
+        gate.collect()
+    with pytest.raises(ValueError, match="more than one row for host h.test"):
+        robots_allower(pdf)
 
 
 def test_crawl_delay_stage(spark):

@@ -126,21 +126,25 @@ def main() -> None:
         plan_of(gated), ["FlatMapCoGroupsInPandas", "BroadcastHashJoin"],
     ))
 
-    # 7. exact two-phase budget split for a hot host: per-(host,salt) local
-    # window bounds every task; the second window sees ≤ S·B survivors
-    from crawl4ai_spark.operators.politeness import split_host_budget
+    # 7. exact budget split for a hot host: the window per salted host_part
+    # key bounds every task; the re-rank per host sees ≤ S·B survivors
+    from crawl4ai_spark.operators.politeness import salt_hot_hosts, split_host_budget
 
+    # three rows in four on the hot host, the rest on seven cold ones (a
+    # constant host would let the optimizer fold the key away)
+    host = F.when(F.col("id") % 4 == 0, F.format_string("c%d.test", F.col("id") % 7)
+                  ).otherwise(F.lit("hot.test"))
     fr = spark.range(5000).select(
-        F.concat(F.lit("https://hot.test/p"), F.col("id")).alias("url"),
-        F.lit("hot.test").alias("host"),
+        F.format_string("https://%s/p%d", host, F.col("id")).alias("url"),
+        host.alias("host"),
         (F.col("id") % 3).cast("int").alias("depth"),
         F.col("id").alias("seq"),
     )
     within, _deferred = split_host_budget(
-        fr, 40, ["depth", "seq"], hot_hosts=["hot.test"], salt_buckets=8
+        salt_hot_hosts(fr, ["hot.test"], 8), 40, ["depth", "seq"]
     )
     sections.append((
-        "Hot-host budget split (two-phase salted windows, exact)",
+        "Hot-host budget split (rank per salted key, re-rank survivors, exact)",
         plan_of(within), ["Window", "hashpartitioning"],
     ))
 
